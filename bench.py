@@ -133,7 +133,7 @@ ORGANIC_PICKS = (
 # size, and at organic_sf1 (30k vectors → ~1.9k-vector clusters) the
 # within-cluster scoring costs ~270 s vs ~7 s for the production
 # k='auto' path (round-9 measurement). The leg prices the PRODUCTION
-# configuration, same as tools/sweep_organic_sf100.py.
+# configuration, same as `tools/measure.py sweep organic_sf100`.
 # The pick also runs SINGLE-PASS: semantic_dedup localCheckpoints its
 # labeled-vector frame, and those blocks accumulate across repeated
 # executions in one session (measured 7 s first pass → 20 s second at
@@ -150,13 +150,19 @@ def _organic_semantic_auto(spark, sf_dir):
 ORGANIC_OVERRIDES = {"q_semantic_dedup": _organic_semantic_auto}
 ORGANIC_SINGLE_PASS = {"q_semantic_dedup"}
 
-# The compact line's report set never shrinks round-over-round: the r11
-# top-10 stays pinned alongside whatever the current round's top 10 is.
-PINNED_REPORT = (
-    "q_semantic_dedup_autok", "q_semantic_dedup", "q_datapipe_e2e_v2",
-    "q_pagerank", "q_dedup_canonical", "q_ann_ivf", "q_dedup_components",
-    "q_bpe_train", "q_simjoin_prefix", "q_containment",
-)
+def pinned_report() -> tuple[str, ...]:
+    """The compact line's report set never shrinks round-over-round: every
+    query the newest committed BENCH_r<N>.json reported stays pinned
+    alongside the current top 10 (the _c<cores> variants are core-count
+    probes, not the round's record)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    records = [(int(m.group(1)), f) for f in os.listdir(here)
+               if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))]
+    if not records:
+        return ()
+    with open(os.path.join(here, max(records)[1])) as f:
+        parsed = json.load(f).get("parsed") or {}
+    return tuple(parsed.get("queries") or ())
 
 
 def run_organic_leg() -> int:
@@ -376,7 +382,7 @@ def main() -> int:
     # (PERF_r11 flagged three improved queries that way). Keep every
     # query the previous round's compact line reported; entries are only
     # ever ADDED to `queries`, never removed or renamed.
-    for n in PINNED_REPORT:
+    for n in pinned_report():
         if n in timings and timings[n] >= 0:
             slowest.setdefault(n, timings[n])
     compact = {

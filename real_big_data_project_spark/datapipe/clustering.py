@@ -204,7 +204,7 @@ def _assign_two_level(
     a vector near a coarse boundary can assign to a second-best fine
     cluster. That is the IVF trade the SemDeDup paper itself makes;
     recall against planted duplicates is measured, not assumed
-    (tools/sweep_organic_sf100.py records dups_found)."""
+    (`tools/measure.py sweep organic_sf100` records dups_<scale>)."""
     # Pin: the mini k-means makes several passes over `cents`, whose
     # lineage at pass 2 is a full-corpus update aggregate (and at pass 1
     # a corpus TakeOrdered) — unpinned, each mini-pass re-runs it.

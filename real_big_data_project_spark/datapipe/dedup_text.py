@@ -796,7 +796,6 @@ def simjoin_prefix(
 def containment_pairs(
     docs: DataFrame,
     n_shingle: int = 3,
-    max_df: int = 2,
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -809,61 +808,38 @@ def containment_pairs(
 
     Candidates are NOT symmetric-LSH bands (a contained short doc rarely
     collides on minhash bands with its container) — they are pairs
-    sharing a shingle with document frequency ≤ ``max_df``, the
-    rare-n-gram anchoring used in benchmark-contamination scans. Pair
-    fan-out is Σ_{df≤m} C(df,2) ≤ m·|postings| — LINEAR in corpus size
-    for fixed m, never all-pairs. Verification then touches candidates
-    only, with shingle sets travelling as xxhash64 longs (cardinalities
-    preserved; the ngram_jaccard_pairs transport argument verbatim).
+    sharing a shingle with document frequency ≤ 2, the rare-n-gram
+    anchoring used in benchmark-contamination scans. Pair fan-out is at
+    most one pair per shingle — LINEAR in corpus size, never all-pairs.
+    Verification then touches candidates only, with shingle sets
+    travelling as xxhash64 longs (cardinalities preserved; the
+    ngram_jaccard_pairs transport argument verbatim).
     Containment is one integer division — bit-exact across engines.
     """
-    if max_df == 2:
-        # Candidates WITHOUT the postings self-join (round 12). A pair can
-        # only share a df ≤ 2 shingle when that shingle's df is EXACTLY 2,
-        # and a shingle held by exactly two distinct docs anchors exactly
-        # the pair (min_doc, max_doc) — so ONE aggregate keyed by shingle
-        # (count(distinct doc_id) for df, min/max for the pair; narrow
-        # codegen buffers, no posting arrays that a hot boilerplate
-        # shingle could blow up) produces the identical candidate set.
-        # This replaces the per-(doc, shingle) distinct (2 aggs + a
-        # gram-sized exchange), the doc-frequency re-aggregation, the
-        # corpus-gram ⋈ rare-vocabulary SortMergeJoin and the postings
-        # self-join — at organic_sf1 those were the query's dominant CPU
-        # (a 5.2 CPU-minute string-keyed aggregate + three ~190 MB
-        # exchanges for 4.36M distinct shingles; guide §2.4). The pair
-        # distinct stays: one pair may share several rare shingles.
-        agg = (
-            exploded_shingles(docs, n_shingle, id_col, text_col,
-                              distinct=False)
-            .groupBy("shingle")
-            .agg(F.countDistinct("doc_id").alias("_df"),
-                 F.min("doc_id").alias("_da"),
-                 F.max("doc_id").alias("_db"))
-        )
-        cand = (
-            agg.filter(F.col("_df") == 2)
-            .select(F.col("_da").alias("doc_a"), F.col("_db").alias("doc_b"))
-            .distinct()
-        )
-    else:
-        sh = exploded_shingles(docs, n_shingle, id_col, text_col)
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        rare = (
-            sh.join(dfreq.filter(F.col("df") <= max_df), "shingle")
-            .select("doc_id", "shingle")
-        )
-        cand = (
-            rare.alias("a")
-            .join(rare.alias("b"),
-                  (F.col("a.shingle") == F.col("b.shingle"))
-                  & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
+    # Candidates from ONE aggregate keyed by shingle, no postings
+    # self-join: a pair can only share a df ≤ 2 shingle when that
+    # shingle's df is EXACTLY 2, and a shingle held by exactly two distinct
+    # docs anchors exactly the pair (min_doc, max_doc). count(distinct),
+    # min and max keep narrow codegen buffers, with no posting arrays that
+    # a hot boilerplate shingle could blow up; at organic_sf1 the join
+    # formulation's string-keyed aggregates and exchanges were the query's
+    # dominant CPU. The pair distinct stays: one pair may share several
+    # rare shingles.
+    agg = (
+        exploded_shingles(docs, n_shingle, id_col, text_col, distinct=False)
+        .groupBy("shingle")
+        .agg(F.countDistinct("doc_id").alias("_df"),
+             F.min("doc_id").alias("_da"),
+             F.max("doc_id").alias("_db"))
+    )
+    cand = (
+        agg.filter(F.col("_df") == 2)
+        .select(F.col("_da").alias("doc_a"), F.col("_db").alias("doc_b"))
+        .distinct()
+    )
     # Separate non-distinct build for the verification sets: collect_set
     # dedups by value, so re-running the map-only gram stream is cheaper
-    # than sharing `sh`'s distinct exchange (round 11).
+    # than sharing a distinct (doc, shingle) exchange (round 11).
     sets = (
         exploded_shingles(docs, n_shingle, id_col, text_col,
                           distinct=False)

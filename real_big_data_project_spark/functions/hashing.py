@@ -4,11 +4,9 @@ Everything is built on md5 (identical output in Spark, DuckDB, and every
 other engine) so that MinHash/SimHash signatures are reproducible across
 the engine and the correctness oracle. Spark's native xxhash64/murmur is
 faster but engine-specific; md5 keeps the gate honest and is still
-JVM-side/codegen'd.
-
-MinHash here uses the *lexicographic min of salted md5 hex digests*: for a
-random oracle H, min over shingles of H(salt_i || s) is a valid min-wise
-signature component (each salt simulates an independent permutation).
+JVM-side/codegen'd. The production MinHash/SimHash pipelines live in
+datapipe/dedup_text.py; this module holds the shared shingling and the
+SimHash reference implementation tests compare them against.
 """
 
 from __future__ import annotations
@@ -40,34 +38,6 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def _salted_min(shingles: Column, salt: int) -> Column:
-    # NB: the lambda must take exactly one arg — PySpark infers higher-order
-    # -function arity from the lambda signature, so a `i=salt` default arg
-    # would silently rebind to transform's (value, index) form.
-    return F.array_min(
-        F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{salt}:"), s)))
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """array<string> of length `num_hashes`: per salt, the lexicographic
-    min of md5(salt || ':' || shingle)."""
-    return F.array(*[_salted_min(shingles, i) for i in range(num_hashes)])
-
-
-def lsh_bands(signature: Column, num_bands: int, rows_per_band: int) -> Column:
-    """array<string> of band keys: band index + md5 of the band's slice of
-    the signature. Two docs share a band key iff the band's rows all match."""
-    bands = [
-        F.concat(
-            F.lit(f"b{b}:"),
-            F.md5(F.array_join(F.slice(signature, b * rows_per_band + 1, rows_per_band), "|")),
-        )
-        for b in range(num_bands)
-    ]
-    return F.array(*bands)
-
-
 def simhash64_bits(col: Column | str) -> Column:
     """SimHash-64 fingerprint as a string of 64 bits.
 
@@ -96,7 +66,9 @@ def simhash64_bits(col: Column | str) -> Column:
 
 
 def _bit_vote(toks: Column, pos: int, ones: str) -> Column:
-    # Closure factory (not a default arg) — see _salted_min's arity note.
+    # Closure factory, not a default arg: PySpark infers a higher-order
+    # function's arity from the lambda's parameter count, so an extra
+    # `pos=pos` parameter would change what the lambda is called with.
     return F.aggregate(
         toks,
         F.lit(0),
@@ -106,13 +78,3 @@ def _bit_vote(toks: Column, pos: int, ones: str) -> Column:
             F.lit(1),
         ).otherwise(F.lit(-1)),
     )
-
-
-def hamming_distance_bits(a: Column, b: Column) -> Column:
-    """Hamming distance between two equal-length '0'/'1' strings."""
-    pairs = F.zip_with(
-        F.split(a, ""),
-        F.split(b, ""),
-        lambda x, y: F.when(x != y, 1).otherwise(0),
-    )
-    return F.aggregate(pairs, F.lit(0), lambda acc, v: acc + v)

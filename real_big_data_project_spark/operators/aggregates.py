@@ -77,17 +77,6 @@ def group_count_by_month(df: DataFrame, ts: str) -> DataFrame:
     )
 
 
-def table_counts(df: DataFrame, distinct_key: str) -> DataFrame:
-    """A4/A5 — COUNT(*) + COUNT(DISTINCT key) diagnostics
-    (etl/etl.py:870-873). At 100 TB prefer approx_count_distinct — exposed
-    as a third column so callers can choose."""
-    return df.agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct(distinct_key).alias("n_keys"),
-        F.approx_count_distinct(distinct_key).alias("n_keys_approx"),
-    )
-
-
 def minmax_range(df: DataFrame, ts: str) -> DataFrame:
     """A6/F8 — MIN/MAX of the time column, formatted
     (dashboard/timescaledb_model.py:488-497)."""

@@ -3939,5 +3939,4 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = R.load_table(spark, sf_dir, "documents")
     corpus = CP.with_near_duplicates(docs)
-    return DT.containment_pairs(corpus, n_shingle=3, max_df=2,
-                                threshold=0.8)
+    return DT.containment_pairs(corpus, n_shingle=3, threshold=0.8)

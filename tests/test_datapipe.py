@@ -1181,7 +1181,7 @@ def test_containment_catches_planted_truncated_copies(docs, corpus):
     """The truncated-tail plants are strict SUBSETS of their originals:
     containment must report them at cont≈1 in the subset direction even
     where Jaccard would sit below a high threshold."""
-    pairs = DT.containment_pairs(corpus, n_shingle=3, max_df=2,
+    pairs = DT.containment_pairs(corpus, n_shingle=3,
                                  threshold=0.8).collect()
     assert pairs
     found = {(r.doc_a, r.doc_b): r for r in pairs}

@@ -460,9 +460,7 @@ def test_sweep_tools_time_with_noop_writer_not_count():
     import os
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for tool in ("bench.py", "tools/sweep_organic.py",
-                 "tools/sweep_organic_sf100.py", "tools/sweep_sf10.py",
-                 "tools/sweep_sf1.py"):
+    for tool in ("bench.py", "tools/measure.py"):
         src = open(os.path.join(repo, tool)).read()
         assert 'format("noop")' in src, f"{tool}: no noop forcing"
 

@@ -10,8 +10,8 @@ organic_sf10 (200k base vectors, 100k planted copies) for
 target_cluster ∈ {64, 128, 256}, so a deployment chooses the dial on
 data, not on the docstring.
 
-Protocol (matches sweep_organic_sf100's single-pass picks): one
-subprocess (fresh JVM) per leg — semantic_dedup localCheckpoints its
+Protocol (matches `measure.py sweep organic_sf100`'s single-pass picks):
+one subprocess (fresh JVM) per leg — semantic_dedup localCheckpoints its
 labeled-vector frame and those blocks accumulate across executions in
 one session — fixture-touching warm scan, ONE timed pass writing real
 parquet (result-sized), recall accounted from the written parquet.
