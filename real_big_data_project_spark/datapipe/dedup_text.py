@@ -16,8 +16,10 @@ Scale shape (the 100 TB story):
 
 from __future__ import annotations
 
+import warnings
 import weakref
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -51,6 +53,9 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
 
 
 _FAN_PROBE_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+# frames whose probe could not be planned (the gate was skipped); the
+# first skip in a process warns, later ones only count
+fan_out_skips = 0
 
 
 def _fan_out(df: DataFrame, key: str,
@@ -78,15 +83,26 @@ def _fan_out(df: DataFrame, key: str,
     object (``probe`` is the caller's shared `docs` frame; map-only
     select/filter preserve the partition count, and one query's
     shingle/signature builders all reuse the same corpus object, so the
-    cost is paid once per query build, not once per call)."""
+    cost is paid once per query build, not once per call).
+
+    A frame the probe cannot plan — a streaming frame raises
+    AnalysisException, it only runs under ``writeStream.start()`` — is
+    returned as it is: the gate is skipped, counted in ``fan_out_skips``
+    and warned about once. Any other error propagates."""
+    global fan_out_skips
     src = probe if probe is not None else df
-    try:
-        n_parts = _FAN_PROBE_CACHE.get(src)
-        if n_parts is None:
+    n_parts = _FAN_PROBE_CACHE.get(src)
+    if n_parts is None:
+        try:
             n_parts = src.rdd.getNumPartitions()
-            _FAN_PROBE_CACHE[src] = n_parts
-    except Exception:  # planning failed — never block the query on the gate
-        return df
+        except AnalysisException as exc:
+            fan_out_skips += 1
+            if fan_out_skips == 1:
+                warnings.warn(
+                    "doc-id fan-out gate skipped, frame left as planned: "
+                    + str(exc).splitlines()[0], RuntimeWarning, stacklevel=2)
+            return df
+        _FAN_PROBE_CACHE[src] = n_parts
     n = df.sparkSession.sparkContext.defaultParallelism
     if n_parts >= n:
         return df

@@ -59,65 +59,63 @@ def register(name: str, oracle: str | None, description: str = "",
 # compute_prefix(_PINNED) from the live CORRECTNESS_r*.json set and fails
 # the suite if this block is stale (VERDICT r8 item 1: round 8 silently
 # re-proved the identical r7 sample; a hand-maintained prefix cannot be
-# trusted to rotate).  Round-12 prefix: _PINNED is empty (round 12 is an
-# optimization round — no new queries, no output changes; every touched
-# query was re-proven bit-equal against its oracle this round); the
-# staleness-first fill leads with the r08-vintage rows (dedup/streaming/
-# scan families), then r09 — after this gate no catalog query's latest
-# green row predates r08.
-_ROTATION_VINTAGE = 11
+# trusted to rotate).  Vintage-12 prefix: _PINNED is empty (no new
+# queries, no output changes); the staleness-first fill leads with the
+# r09-vintage rows, then r10.
+# rotation prefix (50 of 175 queries; staleness from 175 gated)
+_ROTATION_VINTAGE = 12
 _PINNED: tuple[str, ...] = ()
 _RISKIEST: tuple[str, ...] = (
-    "q_dedup_ngram_jaccard",  # last green r08
-    "q_dedup_recall",  # last green r08
-    "q_dedup_simhash",  # last green r08
-    "q_doc_fingerprint",  # last green r08
-    "q_dq_expectations",  # last green r08
-    "q_ewma_daily",  # last green r08
-    "q_filter_funnel",  # last green r08
-    "q_gapfill_locf",  # last green r08
-    "q_incremental_ohlcv",  # last green r08
-    "q_kmeans",  # last green r08
-    "q_knn_graph",  # last green r08
-    "q_ntile_deciles",  # last green r08
-    "q_pagerank",  # last green r08
-    "q_pii_scrub",  # last green r08
-    "q_pipeline_e2e",  # last green r08
-    "q_scan_excel",  # last green r08
-    "q_scan_jdbc",  # last green r08
-    "q_semantic_dedup",  # last green r08
-    "q_simjoin_prefix",  # last green r08
-    "q_stream_stream_join",  # last green r08
-    "q_streaming_dedup",  # last green r08
-    "q_streaming_enrich",  # last green r08
-    "q_streaming_ohlcv",  # last green r08
-    "q_streaming_sessions",  # last green r08
-    "q_tags_resolve",  # last green r08
-    "q_train_test_split",  # last green r08
-    "q_trend_slope_sql",  # last green r08
-    "q_union_all",  # last green r08
-    "q_bigram_lm",  # last green r09
-    "q_bm25",  # last green r09
-    "q_bpe_train",  # last green r09
-    "q_containment",  # last green r09
-    "q_corpus_report",  # last green r09
-    "q_data_mixture",  # last green r09
-    "q_datapipe_e2e_v2",  # last green r09
-    "q_dedup_exact",  # last green r09
-    "q_doc_chunking",  # last green r09
-    "q_embedding_pool",  # last green r09
-    "q_grouping_sets",  # last green r09
-    "q_having_large_orders",  # last green r09
-    "q_heavy_hitters",  # last green r09
-    "q_idle_rich_customers",  # last green r09
-    "q_importance_resample",  # last green r09
-    "q_label_propagation",  # last green r09
-    "q_linreg_train",  # last green r09
-    "q_median_mode",  # last green r09
-    "q_merge_upsert",  # last green r09
-    "q_min_price_supplier",  # last green r09
-    "q_percentiles",  # last green r09
-    "q_perplexity_buckets",  # last green r09
+    "q_pivot_wide",  # last green r09
+    "q_quantile_bucket",  # last green r09
+    "q_rank_functions",  # last green r09
+    "q_recursive_ancestry",  # last green r09
+    "q_scan_csv_quarantine",  # last green r09
+    "q_scan_jsonl",  # last green r09
+    "q_scan_mixed_dir",  # last green r09
+    "q_scan_orc",  # last green r09
+    "q_scd2_intervals",  # last green r09
+    "q_sessionize",  # last green r09
+    "q_snapshot_diff",  # last green r09
+    "q_source_overlap",  # last green r09
+    "q_span_dedup",  # last green r09
+    "q_sql_passthrough",  # last green r09
+    "q_streaming_stateful_pct",  # last green r09
+    "q_supplier_wait_fault",  # last green r09
+    "q_svm_train",  # last green r09
+    "q_time_travel",  # last green r09
+    "q_trend_slope",  # last green r09
+    "q_udtf_chunks",  # last green r09
+    "q_unpivot",  # last green r09
+    "q_value_histogram",  # last green r09
+    "q_vocab_coverage",  # last green r09
+    "q_vwap_twap",  # last green r09
+    "q_zorder_layout",  # last green r09
+    "q_above_avg",  # last green r10
+    "q_anti_join_new_keys",  # last green r10
+    "q_array_ops",  # last green r10
+    "q_asof_join",  # last green r10
+    "q_bpe_encode",  # last green r10
+    "q_bpe_vocab",  # last green r10
+    "q_broadcast_lookup",  # last green r10
+    "q_case_market_map",  # last green r10
+    "q_case_when_clamp",  # last green r10
+    "q_company_timeseries",  # last green r10
+    "q_counts",  # last green r10
+    "q_customer_revenue",  # last green r10
+    "q_daily_bars_fallback",  # last green r10
+    "q_dashboard_session",  # last green r10
+    "q_dedup_keys",  # last green r10
+    "q_doc_tokens",  # last green r10
+    "q_event_transitions",  # last green r10
+    "q_exists_late_orders",  # last green r10
+    "q_filter_outliers",  # last green r10
+    "q_filter_positive",  # last green r10
+    "q_first_last_per_group",  # last green r10
+    "q_fuzzy_match",  # last green r10
+    "q_group_count",  # last green r10
+    "q_lang_id",  # last green r10
+    "q_market_share",  # last green r10
 )
 
 

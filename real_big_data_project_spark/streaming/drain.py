@@ -15,15 +15,21 @@ overwrites (last batch = full result), ``append``/``update`` append
 (Structured Streaming emits each appended/updated row exactly once
 across an availableNow drain with a fresh checkpoint).
 
-State-store sizing: the drains also pin ``spark.sql.shuffle.partitions``
-to a small count for the duration of the stream — a one-shot local drain
-wants a handful of state stores, not one per configured batch shuffle
-partition (each store is per-partition commit IO per micro-batch; at
-sf0.1 the 32-partition default spent more time committing empty stores
-than aggregating). A continuous production job sizes this to its own
-state volume instead; results are partition-count-independent either
-way (tests/test_stress.py runs the catalog under a prime partition
-count).
+State-store sizing: the drains pin ``spark.sql.shuffle.partitions`` for
+the duration of the stream to ``min(requested, defaultParallelism)`` —
+the drain's tuned store count (``DRAIN_SHUFFLE_PARTITIONS`` or its
+per-drain override), capped at the session's task slots. Every state
+store pays a data-independent commit in every micro-batch, measured at
+about 60-70 ms per store per batch on a 4-core box, the same with the
+checkpoint on tmpfs as on ext4. Stores beyond the slot count add another
+wave of that commit and no parallelism: a 2,500-event dedup batch on 4
+slots summed 960-1,090 ms of commitTimeMs over 16 stores (four waves)
+against 265-295 ms over 4 (one wave). A box with at least as many slots
+as the tuned count keeps it unchanged. A continuous production job sizes
+this to its own state volume instead; results are
+partition-count-independent either way (tests/test_stress.py runs the
+catalog under a prime partition count), and every drain starts from a
+fresh checkpoint, so no stored state carries an older count.
 """
 
 from __future__ import annotations
@@ -51,12 +57,12 @@ def _drain_root() -> str:
 
 DRAIN_ROOT = _drain_root()
 
-# Default state-store count for one-shot local drains (see module doc).
-# Per-drain overrides: measured at sf0.1, Python-bound stateful work
-# (applyInPandasWithState) scales to 16 stores (6.2 s → 2.2 s), while the
-# state-volume-bound stream-stream join is fastest at 8 (2.6 s vs 5.3 s
-# at 32 — each extra store adds per-batch commit overhead on a state
-# that is events-sized either way).
+# Default state-store count for one-shot local drains, before the cap at
+# the session's task slots (see module doc). Per-drain overrides were tuned
+# by a store-count sweep on a 32-core box at sf0.1: Python-bound stateful
+# work (applyInPandasWithState) scales to 16 stores (6.2 s → 2.2 s), while
+# the state-volume-bound stream-stream join is fastest at 8 (2.6 s vs
+# 5.3 s at 32).
 DRAIN_SHUFFLE_PARTITIONS = "8"
 
 
@@ -176,6 +182,10 @@ def drain_available_now(
     parquet directory via ``foreachBatch``; return a lazy batch scan of
     the drained output (empty-but-typed frame if the source was empty).
 
+    ``shuffle_partitions``: the drain's tuned state-store count (default
+    ``DRAIN_SHUFFLE_PARTITIONS``); the stream runs with the smaller of it
+    and the session's ``defaultParallelism`` (see module doc).
+
     ``progress_sink``: a list that receives the query's per-microbatch
     StreamingQueryProgress dicts after termination — the state-store
     metrics (`stateOperators[].numRowsTotal/numRowsRemoved`) are how the
@@ -195,9 +205,10 @@ def drain_available_now(
     prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
     prev_nprog = spark.conf.get(
         "spark.sql.streaming.numRecentProgressUpdates", None)
+    requested = int(shuffle_partitions or DRAIN_SHUFFLE_PARTITIONS)
     spark.conf.set(
         "spark.sql.shuffle.partitions",
-        shuffle_partitions or DRAIN_SHUFFLE_PARTITIONS,
+        str(min(requested, spark.sparkContext.defaultParallelism)),
     )
     if progress_sink is not None:
         # recentProgress keeps only the last N updates (default 100) —

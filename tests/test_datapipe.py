@@ -81,6 +81,33 @@ def test_exploded_shingles_match_reference_column_impl(corpus):
     assert fast == ref
 
 
+def test_fan_out_skips_unplannable_probe_and_warns_once(spark, tmp_path,
+                                                         monkeypatch):
+    """A streaming frame cannot be planned as a batch probe: the fan-out
+    gate returns it untouched, counts the skip and warns on the first one
+    only. An error other than the expected AnalysisException propagates."""
+    import warnings
+
+    spark.range(3).write.parquet(str(tmp_path / "src"))
+    stream = spark.readStream.schema("id bigint").parquet(str(tmp_path / "src"))
+    monkeypatch.setattr(DT, "fan_out_skips", 0)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert DT._fan_out(stream, "id") is stream
+        assert DT._fan_out(stream, "id") is stream
+    assert DT.fan_out_skips == 2
+    assert [w.category for w in caught] == [RuntimeWarning]
+    assert "fan-out gate skipped" in str(caught[0].message)
+
+    class Unplannable:
+        @property
+        def rdd(self):
+            raise ValueError("not an analysis error")
+
+    with pytest.raises(ValueError):
+        DT._fan_out(stream, "id", probe=Unplannable())
+
+
 def test_simhash_df_impl_matches_reference_column_impl(docs):
     """The explode/aggregate SimHash (fast path) must produce the exact
     fingerprint of the HOF reference implementation — the oracle SQL is

@@ -429,3 +429,46 @@ def test_stateful_pct_idle_series_evict(spark, provider):
     assert removed >= n_idle, [op["numRowsRemoved"] for op in ops]
     finals = [op["numRowsTotal"] for op in ops]
     assert finals[-1] == _DAY_USERS, finals  # idle series gone, live kept
+
+
+def test_drain_caps_state_stores_at_task_slots(spark):
+    """A drain runs at most one state store per task slot: each store pays
+    a data-independent commit every micro-batch, so stores beyond the
+    slot count only add commit waves. The dedup drain asks for 16 and
+    runs min(16, slots); a drain asking for fewer keeps its count; the
+    session's own shuffle-partition conf is restored either way."""
+    from real_big_data_project_spark.streaming.dedup_stream import (
+        run_streaming_dedup,
+    )
+    from real_big_data_project_spark.streaming.drain import drain_available_now
+    from real_big_data_project_spark.streaming.ohlcv_stream import (
+        EVENTS_RAW_SCHEMA,
+    )
+
+    slots = spark.sparkContext.defaultParallelism  # 8 in the test session
+    capped = min(16, slots)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    landing, n_unique = _three_day_landing("store_cap", duplicate=True)
+
+    progress: list = []
+    out = run_streaming_dedup(spark, landing, watermark="1 hour",
+                              landing=landing, max_files_per_trigger=1,
+                              progress_sink=progress)
+    assert out.count() == n_unique
+    ops = _state_ops(progress)
+    assert ops
+    assert {(op["numShufflePartitions"], op["numStateStoreInstances"])
+            for op in ops} == {(capped, capped)}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+    small = max(1, slots // 2)
+    progress = []
+    counts = spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(landing) \
+        .groupBy("user_id").count()
+    drained = drain_available_now(counts, "complete", "store_cap_small",
+                                  shuffle_partitions=str(small),
+                                  progress_sink=progress)
+    assert drained.count() == _DAY_USERS
+    assert {(op["numShufflePartitions"], op["numStateStoreInstances"])
+            for op in _state_ops(progress)} == {(small, small)}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

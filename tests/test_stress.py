@@ -17,7 +17,9 @@ Worst-case re-proof gap is therefore BOUNDED at ⌈|catalog| /
 DEFAULT_SUBSET_SIZE⌉ generations (round-robin coverage), instead of the
 old geometric tail. The generation key is the testdata signature
 (`fixture_tag`), so the same generation always re-runs the same subset
-(idempotent within a round). The FULL sweep, run at least once per
+(idempotent within a round); the default suite also re-runs the previous
+generation's subset, so every selected query is proven on two
+consecutive generations. The FULL sweep, run at least once per
 round via the opt-in below, remains the belt-and-braces total pass; the
 default subset exists to catch environment-coupled flakes early.
 
@@ -89,9 +91,21 @@ def test_rotation_gap_is_bounded():
 @functools.lru_cache(maxsize=4)  # parametrized ~160x per run: one
 # fixture_tag stat-walk + one ranking per sf dir, not one per test
 def _default_subset_cached(sf: str) -> frozenset[str]:
+    """This generation's subset plus the previous generation's: a query
+    leaves the default suite only after it has passed on two consecutive
+    testdata generations, so a regeneration never turns last
+    generation's proofs into skips before they are re-proven."""
     from real_big_data_project_spark.sources.registry import fixture_tag
 
     tag = fixture_tag(sf)
+    ledger = _load_ledger()
+    tags = [e.get("tag") for e in ledger]
+    i = tags.index(tag) if tag in tags else len(ledger)
+    previous = frozenset(ledger[i - 1]["names"]) if i else frozenset()
+    return _generation_subset(tag) | previous
+
+
+def _generation_subset(tag: str) -> frozenset[str]:
     ledger = _load_ledger()
     for e in ledger:
         if e.get("tag") == tag:  # same generation → same subset
