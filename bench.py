@@ -53,11 +53,14 @@ def run_single(name: str) -> int:
     return 0
 
 
-def _fresh_top5(timings: dict[str, float]) -> dict[str, float | None]:
+def _fresh_top5(
+    timings: dict[str, float],
+) -> tuple[dict[str, float | None], dict[str, str]]:
     """Re-time the 5 slowest in-bench queries, each in its OWN process
     (fresh JVM + session): in-bench times inflate 2-8x for some families
     from session GC/codegen debt (PERF_NOTES), so the in-bench ranking
-    alone misleads. None = the fresh probe failed/timed out."""
+    alone misleads. Returns (seconds, failures): a probe that timed out
+    or printed no result reads None, and its reason lands in failures."""
     import subprocess
 
     top5 = sorted(
@@ -65,21 +68,30 @@ def _fresh_top5(timings: dict[str, float]) -> dict[str, float | None]:
         key=lambda n: -timings[n],
     )[:5]
     out: dict[str, float | None] = {}
+    failures: dict[str, str] = {}
     for name in top5:
+        out[name] = None
         try:
             p = subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--single", name],
                 capture_output=True, text=True, timeout=240,
                 env=os.environ.copy(),
             )
-            line = p.stdout.strip().splitlines()[-1] if p.stdout.strip() else "{}"
-            out[name] = json.loads(line).get("sec")
-        except Exception:
-            out[name] = None
-    return out
+        except subprocess.TimeoutExpired as exc:
+            failures[name] = type(exc).__name__
+        else:
+            lines = p.stdout.strip().splitlines()
+            try:
+                out[name] = json.loads(lines[-1])["sec"]
+            except (IndexError, ValueError, KeyError) as exc:
+                failures[name] = f"{type(exc).__name__} (rc={p.returncode})"
+        if name in failures:
+            print(f"bench: fresh_top5 {name} FAILED: {failures[name]}",
+                  file=sys.stderr)
+    return out, failures
 
 
-def _warm_fixtures(spark, qmap, sf_dir: str) -> None:
+def _warm_fixtures(spark, qmap, sf_dir: str) -> dict[str, str]:
     """Untimed full-catalog pre-pass, run ONCE per testdata generation.
 
     When the driver regenerates the testdata (new fixture tag), every
@@ -91,9 +103,11 @@ def _warm_fixtures(spark, qmap, sf_dir: str) -> None:
     the clock warms every fixture BY CONSTRUCTION — no hand-maintained
     query→fixture mapping to rot — and a tag-keyed marker file makes the
     pass free on every later bench of the same generation. Disable with
-    SPARK_GRAFT_BENCH_WARMUP=0 for quick iteration."""
+    SPARK_GRAFT_BENCH_WARMUP=0 for quick iteration. Returns the queries
+    that failed in the pass, with their exception type."""
+    failures: dict[str, str] = {}
     if os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") == "0":
-        return
+        return failures
     from real_big_data_project_spark.sources.registry import fixture_tag
 
     art = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -101,17 +115,20 @@ def _warm_fixtures(spark, qmap, sf_dir: str) -> None:
     os.makedirs(art, exist_ok=True)
     marker = os.path.join(art, f".bench_warmed_{fixture_tag(sf_dir)}")
     if os.path.exists(marker):
-        return
+        return failures
     t0 = time.perf_counter()
     for name in sorted(qmap):
         try:
             force(qmap[name](spark, sf_dir))
-        except Exception:
-            pass  # the timed loop surfaces and records the failure
+        except Exception as exc:  # one broken query must not stop the pass
+            failures[name] = type(exc).__name__
+            print(f"bench: warmup {name} FAILED: {failures[name]}",
+                  file=sys.stderr)
     with open(marker, "w") as f:
         f.write(f"{time.perf_counter() - t0:.1f}\n")
     print(f"bench: fixture warmup pass took "
           f"{time.perf_counter() - t0:.1f}s (untimed)", file=sys.stderr)
+    return failures
 
 
 # The pair-bound dedup/ANN family, priced on the ORGANIC corpus
@@ -264,7 +281,7 @@ def main() -> int:
     warm_streaming(spark)
     # Fixture warmup: one-time fixture builds off the clock (once per
     # testdata generation, marker-keyed).
-    _warm_fixtures(spark, qmap, sf_dir)
+    warmup_failed = _warm_fixtures(spark, qmap, sf_dir)
 
     # Rep-spread protocol (VERDICT r7 item 8): BENCH totals drift ±8-15%
     # with machine state for identical code, so a future reader needs the
@@ -328,10 +345,10 @@ def main() -> int:
     # a failure reads as the full bench timeout, never as saved time.
     if failed:
         total += 600.0 * len(failed)
-    fresh = (
+    fresh, fresh_failed = (
         _fresh_top5(timings)
         if os.environ.get("SPARK_GRAFT_FRESH_TOP5", "1") != "0"
-        else {}
+        else ({}, {})
     )
     # Warm-plan total: rep-spread min where multi-rep samples exist, rep 1
     # otherwise — the number that tracks PLAN cost across rounds even when
@@ -348,7 +365,9 @@ def main() -> int:
         "unit": "sec",
         "queries": timings,
         "failed": failed,
+        "warmup_failed": warmup_failed,
         "fresh_top5": fresh,
+        "fresh_top5_failed": fresh_failed,
         "rep_spread": rep_spread,
         "organic": organic,
         "sf": _sf_from_dir(sf_dir),

@@ -2463,13 +2463,9 @@ def _ensure_tick_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import os
 
     from ..sources import sinks as S
-    from ..sources.csv_source import ARTIFACTS
 
-    base = os.path.join(ARTIFACTS, f"tick_store_{R.fixture_tag(sf_dir)}")
-    raw_dir = os.path.join(base, "raw")
-    bars_dir = os.path.join(base, "bars")
-    done = os.path.join(base, "_DONE")
-    if not os.path.exists(done):
+    def build_into(tmp: str) -> None:
+        raw_dir = os.path.join(tmp, "raw")
         ev = R.events_with_volume(spark, sf_dir)
         S.write_time_partitioned(ev, raw_dir, ts="ts", key="user_id")
         raw = S.read_time_partitioned(spark, raw_dir)
@@ -2484,10 +2480,13 @@ def _ensure_tick_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         )
         # Tiny here; at 100 TB the bars table is itself day-partitioned so
         # the merge's untouched majority is never even listed.
-        bars.write.mode("overwrite").parquet(bars_dir)
-        with open(done, "w") as fh:
-            fh.write("ok\n")
-    return raw_dir, bars_dir
+        bars.write.parquet(os.path.join(tmp, "bars"))
+
+    base = R.ensure_fixture(
+        "tick_store", sf_dir, build_into,
+        f"new={_TICK_NEW_DAYS}|late={_TICK_LATE_DAYS}|mod={_TICK_LATE_MOD}",
+    )
+    return os.path.join(base, "raw"), os.path.join(base, "bars")
 
 
 @register(

@@ -1701,30 +1701,24 @@ def _ensure_cc_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     band index (doc_id, band) of the EXISTING corpus — as parquet under
     the artifact cache. This is the honest incremental-scenario shape: at
     100 TB both indexes are stored tables maintained by the daily job,
-    not something the increment recomputes (fixture-cached exactly like
-    the csv/xlsx/jdbc source fixtures, keyed on the testdata signature)."""
+    not something the increment recomputes (a registry.ensure_fixture
+    dir, like the source-format fixtures)."""
     import os
 
-    from ..sources.csv_source import ARTIFACTS
-
-    base = os.path.join(ARTIFACTS, f"cc_index_{R.fixture_tag(sf_dir)}")
-    comp_dir = os.path.join(base, "components")
-    band_dir = os.path.join(base, "bands")
-    done = os.path.join(base, "_DONE")
-    if not os.path.exists(done):
+    def build_into(tmp: str) -> None:
         from ..datapipe.components import connected_components
 
         docs = R.load_table(spark, sf_dir, "documents")
         connected_components(
             DT.minhash_lsh_candidates(docs, n_shingle=3),
             src="doc_a", dst="doc_b",
-        ).write.mode("overwrite").parquet(comp_dir)
+        ).write.parquet(os.path.join(tmp, "components"))
         DT.minhash_band_keys(
             DT.minhash_components(docs, 3)
-        ).write.mode("overwrite").parquet(band_dir)
-        with open(done, "w") as fh:
-            fh.write("ok\n")
-    return comp_dir, band_dir
+        ).write.parquet(os.path.join(tmp, "bands"))
+
+    base = R.ensure_fixture("cc_index", sf_dir, build_into)
+    return os.path.join(base, "components"), os.path.join(base, "bands")
 
 
 @register(

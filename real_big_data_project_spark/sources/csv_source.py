@@ -7,8 +7,8 @@ Spark restatement is an explicit-schema csv scan with
 inference — per the engine's type discipline (SURVEY.md §1.2).
 
 For the driver queries the TSV input is materialized once from the
-parquet testdata (int/string columns only — lossless roundtrip) under the
-repo-local ``_artifacts`` cache, with deliberately malformed lines
+parquet testdata (int/string columns only — lossless roundtrip) as a
+``registry.ensure_fixture`` dir, with deliberately malformed lines
 appended to prove the DROPMALFORMED path.
 """
 
@@ -18,9 +18,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-ARTIFACTS = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), "_artifacts")
 
 NATION_SCHEMA = T.StructType([
     T.StructField("n_nationkey", T.LongType(), True),
@@ -34,30 +31,22 @@ MALFORMED_LINES = (
 )
 
 
-def _fixture_dir(sf_dir: str) -> str:
-    from .registry import fixture_tag
-
-    return os.path.join(ARTIFACTS, f"nation_tsv_{fixture_tag(sf_dir)}")
-
-
 def ensure_nation_tsv(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize nation as a TSV directory (once per sf), then append a
-    file of malformed lines the reader must skip."""
-    out = _fixture_dir(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    """Materialize nation as a TSV directory (once per sf), plus a file
+    of malformed lines the reader must skip."""
+    from .registry import ensure_fixture
+
+    def build_into(tmp: str) -> None:
         nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-        (
-            nation.coalesce(1)
-            .write.option("sep", "\t")
-            .option("header", True)
-            .mode("overwrite")
-            .csv(out)
-        )
+        nation.coalesce(1).write.option("sep", "\t").option(
+            "header", True
+        ).csv(tmp)
         # first line of every file is consumed as a header, so lead with one
-        with open(os.path.join(out, "zz_malformed.csv"), "w") as fh:
+        with open(os.path.join(tmp, "zz_malformed.csv"), "w") as fh:
             fh.write("h1\th2\th3\n")
             fh.write(MALFORMED_LINES)
-    return out
+
+    return ensure_fixture("nation_tsv", sf_dir, build_into)
 
 
 def read_nation_tsv(spark: SparkSession, path: str) -> DataFrame:

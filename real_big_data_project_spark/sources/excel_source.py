@@ -35,9 +35,6 @@ from pyspark.sql import types as T
 
 HAS_EXCEL = True  # stdlib codec — always available
 
-ARTIFACTS = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), "_artifacts")
-
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _CELL_REF = re.compile(r"^([A-Z]+)(\d+)$")
 
@@ -300,15 +297,10 @@ NATION_SCHEMA = T.StructType([
 
 def ensure_nation_xlsx(spark: SparkSession, sf_dir: str) -> str:
     """Materialize `nation` as xlsx files (split in two so read_excel_dir
-    exercises multi-file parallelism), once per sf dir. Cache-keyed by
-    registry.fixture_tag (path + parquet stat signature) like every other
-    fixture dir, so an in-place driver regeneration of the testdata
-    invalidates the xlsx instead of serving stale rows."""
-    from .registry import fixture_tag
+    exercises multi-file parallelism), once per sf dir."""
+    from .registry import ensure_fixture
 
-    out = os.path.join(ARTIFACTS, f"nation_xlsx_{fixture_tag(sf_dir)}")
-    done = os.path.join(out, "_DONE")
-    if not os.path.exists(done):
+    def build_into(tmp: str) -> None:
         nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
         rows = [
             (r["n_nationkey"], r["n_name"], r["n_regionkey"])
@@ -318,10 +310,9 @@ def ensure_nation_xlsx(spark: SparkSession, sf_dir: str) -> str:
         ]
         rows.sort()
         mid = max(1, len(rows) // 2)
-        write_xlsx(os.path.join(out, "nation_part1.xlsx"),
+        write_xlsx(os.path.join(tmp, "nation_part1.xlsx"),
                    [f.name for f in NATION_SCHEMA.fields], rows[:mid])
-        write_xlsx(os.path.join(out, "nation_part2.xlsx"),
+        write_xlsx(os.path.join(tmp, "nation_part2.xlsx"),
                    [f.name for f in NATION_SCHEMA.fields], rows[mid:])
-        with open(done, "w") as fh:
-            fh.write("ok\n")
-    return out
+
+    return ensure_fixture("nation_xlsx", sf_dir, build_into)

@@ -17,7 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .csv_source import ARTIFACTS, MALFORMED_LINES, NATION_SCHEMA
+from .csv_source import MALFORMED_LINES, NATION_SCHEMA
 from .excel_source import read_excel_dir, write_xlsx
 
 
@@ -77,14 +77,11 @@ def ensure_nation_mixed(spark: SparkSession, sf_dir: str) -> str:
     """Fixture: `nation` split across ONE tsv-csv file and ONE xlsx file
     in the same directory, plus a malformed csv the reader must skip —
     the reference's real Euronext layout (mixed formats accumulating in
-    one feed dir). Cache keyed by registry.fixture_tag so in-place
-    testdata regeneration invalidates it."""
-    from .registry import fixture_tag
+    one feed dir)."""
+    from .registry import ensure_fixture
 
-    out = os.path.join(ARTIFACTS, f"nation_mixed_{fixture_tag(sf_dir)}")
-    done = os.path.join(out, "_DONE")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
+    def build_into(tmp: str) -> None:
+        os.makedirs(tmp)
         nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
         rows = sorted(
             (r["n_nationkey"], r["n_name"], r["n_regionkey"])
@@ -94,14 +91,13 @@ def ensure_nation_mixed(spark: SparkSession, sf_dir: str) -> str:
         )
         mid = max(1, len(rows) // 2)
         fields = [f.name for f in NATION_SCHEMA.fields]
-        with open(os.path.join(out, "nation_part1.csv"), "w") as fh:
+        with open(os.path.join(tmp, "nation_part1.csv"), "w") as fh:
             fh.write("\t".join(fields) + "\n")
             for r in rows[:mid]:
                 fh.write(f"{r[0]}\t{r[1]}\t{r[2]}\n")
-        write_xlsx(os.path.join(out, "nation_part2.xlsx"), fields, rows[mid:])
-        with open(os.path.join(out, "zz_malformed.csv"), "w") as fh:
+        write_xlsx(os.path.join(tmp, "nation_part2.xlsx"), fields, rows[mid:])
+        with open(os.path.join(tmp, "zz_malformed.csv"), "w") as fh:
             fh.write("h1\th2\th3\n")
             fh.write(MALFORMED_LINES)
-        with open(done, "w") as fh:
-            fh.write("ok\n")
-    return out
+
+    return ensure_fixture("nation_mixed", sf_dir, build_into)

@@ -15,7 +15,7 @@ the decoder is deliberately the ONLY place pickle exists.
 
 For the driver query the fixture snapshots are derived deterministically
 from the parquet `nation` table (one snapshot file per region, reference
-filename grammar), cached under the repo-local ``_artifacts`` dir.
+filename grammar), cached through ``registry.ensure_fixture``.
 """
 
 from __future__ import annotations
@@ -30,8 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .csv_source import ARTIFACTS
-
 SNAPSHOT_SCHEMA = T.StructType([
     T.StructField("n_nationkey", T.LongType(), True),
     T.StructField("n_name", T.StringType(), True),
@@ -43,30 +41,23 @@ SNAPSHOT_SCHEMA = T.StructType([
 _FILENAME_RE = r"([^/]+) (\d{4}-\d{2}-\d{2}) (\d{2}_\d{2}_\d{2})\.bz2$"
 
 
-def _fixture_dir(sf_dir: str) -> str:
-    from .registry import fixture_tag
-
-    return os.path.join(ARTIFACTS, f"snapshots_{fixture_tag(sf_dir)}")
-
-
 def ensure_snapshot_fixture(sf_dir: str) -> str:
     """One bz2-pickled pandas DataFrame per region, named with the
     reference's filename grammar (alias = 'region<k>', date advances with
     the region key, '_'-mangled time part)."""
-    out = _fixture_dir(sf_dir)
-    done = os.path.join(out, ".done")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
+    from .registry import ensure_fixture
+
+    def build_into(tmp: str) -> None:
+        os.makedirs(tmp)
         nation = pd.read_parquet(f"{sf_dir}/nation.parquet")
         for r, grp in nation.groupby("n_regionkey"):
             day = int(r) + 1
             name = f"region{int(r)} 2024-01-{day:02d} 09_30_00.bz2"
             payload = grp[["n_nationkey", "n_name", "n_regionkey"]].reset_index(drop=True)
-            with bz2.open(os.path.join(out, name), "wb") as fh:
+            with bz2.open(os.path.join(tmp, name), "wb") as fh:
                 pickle.dump(payload, fh)
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return out
+
+    return ensure_fixture("snapshots", sf_dir, build_into)
 
 
 def read_snapshots(spark: SparkSession, path: str) -> DataFrame:

@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 
 from ..session import ensure_session_confs
 
+# The repo-local cache root every derived fixture lives under.
+ARTIFACTS = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__)))), "_artifacts")
+
 
 def fixture_tag(sf_dir: str) -> str:
     """Artifact-cache tag for a scale-factor dir: readable basename plus a
@@ -74,47 +78,46 @@ def _recovery_lock_age(lock: str) -> float:
         return -1.0
 
 
-def ensure_parquet_fixture(
-    spark: SparkSession,
-    name: str,
-    sf_dir: str,
-    params: str,
-    build,
-) -> DataFrame:
-    """The ONE caching protocol for derived ground-truth/index fixtures
-    under ``_artifacts/`` (ANN brute top-k, IVF lists, dedup recall
-    truth). Holds the two invariants every call site used to
-    re-implement — and one used to get wrong each:
+def ensure_fixture(name: str, sf_dir: str, build_into, params: str = "") -> str:
+    """The ONE publish path for every derived fixture dir under
+    ``ARTIFACTS`` (source-format scans, ground-truth and index tables,
+    the snapshot store, the tick store, the streaming landing dir) —
+    the Derby database of ``sinks.ensure_nation_jdbc`` is the only
+    in-place build. Returns the published dir. Two invariants:
 
     * **Full cache key.** Path = ``<name>_<fixture_tag(sf_dir)>_<sha1 of
-      params>``: ``params`` must fold in EVERY constant the built frame
-      depends on (thresholds, rounding dp, probe strides, seeds), so
+      params>``: ``params`` must fold in EVERY constant the contents
+      depend on (thresholds, rounding dp, probe strides, seeds), so
       changing a grading constant rebuilds the fixture instead of
       silently serving truth computed under the old constant while the
       inline oracle recomputes under the new one.
-    * **Atomic publish.** The frame is written to a unique temp dir and
-      ``os.rename``d into place. Two concurrent builders (pytest +
-      bench, or bench's fresh-top5 child processes) previously raced
-      ``mode("overwrite")`` on the SAME final dir, which can interleave
-      one job's delete with the other's commit and leave a _SUCCESS-
-      marked dir holding part-files from both. With rename-publish the
-      loser's rename fails (target exists), its temp dir is discarded,
-      and it reads the winner's complete copy.
+    * **Atomic publish.** ``build_into(tmp)`` writes the WHOLE fixture
+      into a unique sibling dir that does not exist yet (Spark's default
+      error mode refuses an existing one); only after it returns is
+      ``_SUCCESS`` written and the dir ``os.rename``d into place. A build
+      that raises is removed, so a fixture cut short between two of its
+      writes (Spark's output, then a hand-written file) is never served.
+      Concurrent builders (pytest + bench, or bench's fresh-top5 child
+      processes) cannot mix part files in one dir: the loser's rename
+      fails (target exists), its temp dir is discarded, and it reads the
+      winner's complete copy.
 
-    ``build`` is a zero-arg callable returning the DataFrame to persist;
-    it is only invoked on a cache miss.
+    ``build_into`` is only invoked on a cache miss.
     """
     import shutil
     import uuid as _uuid
-
-    from .csv_source import ARTIFACTS
 
     sig = hashlib.sha1(params.encode()).hexdigest()[:10]
     out = os.path.join(ARTIFACTS, f"{name}_{fixture_tag(sf_dir)}_{sig}")
     success = os.path.join(out, "_SUCCESS")
     if not os.path.exists(success):
         tmp = f"{out}.build.{_uuid.uuid4().hex}"
-        build().write.mode("error").parquet(tmp)
+        try:
+            build_into(tmp)
+            open(os.path.join(tmp, "_SUCCESS"), "w").close()
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         try:
             os.rename(tmp, out)
         except OSError:
@@ -220,6 +223,22 @@ def ensure_parquet_fixture(
         raise RuntimeError(
             f"fixture publish left no _SUCCESS marker at {out!r}"
         )
+    return out
+
+
+def ensure_parquet_fixture(
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    params: str,
+    build,
+) -> DataFrame:
+    """``ensure_fixture`` for one DataFrame: ``build`` is a zero-arg
+    callable returning the frame to persist as parquet (invoked only on a
+    cache miss); returns the cached copy read back."""
+    out = ensure_fixture(
+        name, sf_dir, lambda tmp: build().write.parquet(tmp), params
+    )
     return spark.read.parquet(out)
 
 

@@ -116,13 +116,12 @@ def ensure_nation_jdbc(spark: SparkSession, sf_dir: str) -> str:
     return its JDBC URL — the fixture for the oracled JDBC round-trip."""
     import os
 
-    from .registry import fixture_tag, load_table
+    from .registry import ARTIFACTS, fixture_tag, load_table
 
-    artifacts = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "_artifacts",
-    )
-    db_dir = os.path.join(artifacts, f"derby_nation_{fixture_tag(sf_dir)}")
+    # Built in place, not through registry.ensure_fixture: the JDBC write
+    # boots the database inside the JVM, and a booted Derby database
+    # cannot be renamed.
+    db_dir = os.path.join(ARTIFACTS, f"derby_nation_{fixture_tag(sf_dir)}")
     url = f"jdbc:derby:{db_dir}/db;create=true"
     marker = os.path.join(db_dir, ".loaded")
     if not os.path.exists(marker):

@@ -284,22 +284,12 @@ def expire_snapshots(root: str, keep_from: int) -> list[str]:
 def ensure_versioned_orders(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent three-version fixture for the time-travel oracle:
     v1 = pre-1998 orders, v2 = append the rest, v3 = compliance-delete
-    every o_custkey divisible by 100. Cached per testdata generation
-    (registry.fixture_tag)."""
-    import shutil
+    every o_custkey divisible by 100. Manifests list group names relative
+    to the root, so the store is built in a temp dir and renamed into
+    place by registry.ensure_fixture."""
+    from .registry import ensure_fixture, load_table
 
-    from .registry import fixture_tag, load_table
-
-    artifacts = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__)))),
-        "_artifacts",
-    )
-    root = os.path.join(artifacts, f"snapstore_orders_{fixture_tag(sf_dir)}")
-    marker = os.path.join(root, ".built")
-    if not os.path.exists(marker):
-        shutil.rmtree(root, ignore_errors=True)  # clear partial builds
-        os.makedirs(root, exist_ok=True)
+    def build_into(root: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         snapshot_append(
             orders.filter(F.col("o_orderdate") < F.lit("1998-01-01")), root
@@ -312,6 +302,5 @@ def ensure_versioned_orders(spark: SparkSession, sf_dir: str) -> str:
             .select("o_custkey").distinct()
         )
         snapshot_delete_keys(spark, root, del_keys, "o_custkey")
-        with open(marker, "w") as f:
-            f.write("ok\n")
-    return root
+
+    return ensure_fixture("snapstore_orders", sf_dir, build_into)

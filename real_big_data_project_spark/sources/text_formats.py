@@ -5,9 +5,9 @@ real feeds also arrive as JSONL event dumps and columnar ORC exports, so
 the engine exposes both with the same discipline as csv_source.py:
 schema-on-read with DECLARED types (never inference — inference reads the
 data twice and types drift between runs), malformed lines dropped
-explicitly, fixtures materialized once per testdata generation under
-``_artifacts`` and verified against the parquet originals by the DuckDB
-oracle.
+explicitly, fixtures materialized once per testdata generation through
+``registry.ensure_fixture`` and verified against the parquet originals by
+the DuckDB oracle.
 
 Scale notes: both readers are splittable distributed scans. JSONL decodes
 JVM-side (Jackson) — fine for landing zones, but convert to parquet/ORC
@@ -23,8 +23,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-from .csv_source import ARTIFACTS
 
 SUPPLIER_SCHEMA = T.StructType([
     T.StructField("s_suppkey", T.LongType(), True),
@@ -44,17 +42,17 @@ def ensure_supplier_jsonl(spark: SparkSession, sf_dir: str) -> str:
     """Materialize supplier as a JSONL directory (once per sf), plus a
     file of malformed lines the reader must drop. Doubles round-trip
     losslessly: Spark writes shortest-roundtrip representations."""
-    from .registry import fixture_tag
+    from .registry import ensure_fixture
 
-    out = os.path.join(ARTIFACTS, f"supplier_jsonl_{fixture_tag(sf_dir)}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def build_into(tmp: str) -> None:
         sup = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
             [f.name for f in SUPPLIER_SCHEMA.fields]
         )
-        sup.coalesce(1).write.mode("overwrite").json(out)
-        with open(os.path.join(out, "zz_malformed.json"), "w") as fh:
+        sup.coalesce(1).write.json(tmp)
+        with open(os.path.join(tmp, "zz_malformed.json"), "w") as fh:
             fh.write(MALFORMED_JSONL)
-    return out
+
+    return ensure_fixture("supplier_jsonl", sf_dir, build_into)
 
 
 def read_supplier_jsonl(spark: SparkSession, path: str) -> DataFrame:
@@ -70,14 +68,12 @@ def read_supplier_jsonl(spark: SparkSession, path: str) -> DataFrame:
 def ensure_part_orc(spark: SparkSession, sf_dir: str) -> str:
     """Materialize part as ORC (once per sf) — the columnar-interchange
     twin of the parquet substrate."""
-    from .registry import fixture_tag
+    from .registry import ensure_fixture
 
-    out = os.path.join(ARTIFACTS, f"part_orc_{fixture_tag(sf_dir)}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        spark.read.parquet(f"{sf_dir}/part.parquet").write.mode(
-            "overwrite"
-        ).orc(out)
-    return out
+    return ensure_fixture(
+        "part_orc", sf_dir,
+        lambda tmp: spark.read.parquet(f"{sf_dir}/part.parquet").write.orc(tmp),
+    )
 
 
 def read_part_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -25,25 +25,18 @@ from pyspark.sql import functions as F
 from .ohlcv_stream import EVENTS_RAW_SCHEMA
 
 
-_ARTIFACTS = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "_artifacts",
-)
-
-
 def duplicated_landing_dir(sf_dir: str) -> str:
-    """A landing directory holding the events file TWICE (idempotently
-    built under _artifacts/) — the at-least-once delivery fixture."""
-    from ..sources.registry import fixture_tag
+    """A landing directory holding the events file TWICE (a
+    registry.ensure_fixture dir) — the at-least-once delivery fixture."""
+    from ..sources.registry import ensure_fixture
 
-    out = os.path.join(_ARTIFACTS, f"dedup_landing_{fixture_tag(sf_dir)}")
-    src = os.path.join(sf_dir, "events.parquet")
-    os.makedirs(out, exist_ok=True)
-    for name in ("events_a.parquet", "events_b.parquet"):
-        dst = os.path.join(out, name)
-        if not os.path.exists(dst):
-            shutil.copyfile(src, dst)
-    return out
+    def build_into(tmp: str) -> None:
+        os.makedirs(tmp)
+        for name in ("events_a.parquet", "events_b.parquet"):
+            shutil.copyfile(os.path.join(sf_dir, "events.parquet"),
+                            os.path.join(tmp, name))
+
+    return ensure_fixture("dedup_landing", sf_dir, build_into)
 
 
 def run_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:

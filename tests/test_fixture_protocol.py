@@ -1,7 +1,8 @@
 """Direct tests of the shared fixture-caching protocol
-(registry.ensure_parquet_fixture) — cache hit, params keying, corpse
-recovery, and the concurrent-winner interleave the round-7 review
-hardened (cleanup must never delete a winner's valid publish)."""
+(registry.ensure_fixture and its parquet wrapper ensure_parquet_fixture)
+— cache hit, params keying, corpse recovery, the concurrent-winner
+interleave the round-7 review hardened (cleanup must never delete a
+winner's valid publish), and builds that fail part-way."""
 
 from __future__ import annotations
 
@@ -11,8 +12,9 @@ import shutil
 
 import pytest
 
-from real_big_data_project_spark.sources.csv_source import ARTIFACTS
 from real_big_data_project_spark.sources.registry import (
+    ARTIFACTS,
+    ensure_fixture,
     ensure_parquet_fixture,
     fixture_tag,
 )
@@ -176,6 +178,89 @@ def test_fixture_fresh_recovery_lock_is_respected(spark, sf_dir, clean):
     finally:
         t.join()
     assert got.count() == 11  # the holder's publish won; no steal
+
+
+class _Cut(Exception):
+    """Stands in for a process killed part-way through a fixture build."""
+
+
+def test_failed_build_leaves_nothing_and_next_call_builds(
+        spark, sf_dir, clean):
+    """A build_into that raises must leave neither the final dir nor a
+    .build.* sibling behind, and the next call must build the fixture."""
+    out = _fixture_path("fxtest_fail", sf_dir, "")
+
+    def build_then_fail(tmp):
+        spark.range(3).toDF("v").write.parquet(tmp)
+        raise _Cut
+
+    with pytest.raises(_Cut):
+        ensure_fixture("fxtest_fail", sf_dir, build_then_fail)
+    assert not os.path.exists(out)
+    assert not [n for n in os.listdir(ARTIFACTS)
+                if n.startswith(os.path.basename(out) + ".build.")]
+
+    got = ensure_fixture(
+        "fxtest_fail", sf_dir,
+        lambda tmp: spark.range(5).toDF("v").write.parquet(tmp),
+    )
+    assert got == out
+    assert spark.read.parquet(got).count() == 5
+
+
+def test_interrupted_tsv_build_is_rebuilt_with_its_malformed_lines(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """Cut ensure_nation_tsv off after Spark's CSV write, with the
+    malformed-lines file only half written. The next call must not serve
+    that fixture: the quarantine has to capture both malformed lines.
+    Runs on a private copy of the sf dir, so the shared fixture is not
+    touched."""
+    from real_big_data_project_spark.sources import csv_source
+
+    private = tmp_path / "sf_private"
+    private.mkdir()
+    shutil.copyfile(os.path.join(sf_dir, "nation.parquet"),
+                    private / "nation.parquet")
+    prefix = f"nation_tsv_{fixture_tag(str(private))}"
+
+    class _TornFile:
+        """Lets the header line through, then dies mid-file."""
+
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, text):
+            if self.fh.tell():
+                raise _Cut
+            self.fh.write(text)
+
+    def torn_open(path, *args, **kwargs):
+        fh = open(path, *args, **kwargs)
+        if os.path.basename(path) == "zz_malformed.csv":
+            return _TornFile(fh)
+        return fh
+
+    monkeypatch.setattr(csv_source, "open", torn_open, raising=False)
+    try:
+        with pytest.raises(_Cut):
+            csv_source.ensure_nation_tsv(spark, str(private))
+        monkeypatch.undo()
+        path = csv_source.ensure_nation_tsv(spark, str(private))
+        _clean, quarantine = csv_source.read_nation_tsv_with_quarantine(
+            spark, path)
+        bad = [r._corrupt_record for r in quarantine.collect()]
+        assert len(bad) == 2
+        assert any("no tabs" in b for b in bad)
+    finally:
+        for n in os.listdir(ARTIFACTS):
+            if n.startswith(prefix):
+                shutil.rmtree(os.path.join(ARTIFACTS, n), ignore_errors=True)
 
 
 def test_snapshot_store_many_writer_cas(spark, tmp_path):

@@ -1,7 +1,7 @@
-"""Spark-vs-Spark result equivalence for optimization work (round 11).
+"""Spark-vs-Spark result equivalence for optimization work.
 
 Dump mode writes each named query's sf-dir output as a canonicalized
-pickle under ``_artifacts/r11_baseline/<sf>/<name>.pkl``; check mode
+pickle under ``_artifacts/diff_baseline/<sf>/<name>.pkl``; check mode
 re-runs the query with the CURRENT code and compares against the stored
 dump with the same canonical ordering the driver's oracle comparator
 uses (plans/oracle_check.py::_canonicalize) — bit-exact by default,
@@ -30,14 +30,14 @@ def main() -> int:
     assert mode in ("dump", "check") and names
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(REPO, "_artifacts", "r11_baseline", sf_tag)
+    out_dir = os.path.join(REPO, "_artifacts", "diff_baseline", sf_tag)
     os.makedirs(out_dir, exist_ok=True)
 
     from real_big_data_project_spark.plans import queries_map
     from real_big_data_project_spark.plans.oracle_check import _canonicalize
     from real_big_data_project_spark.session import get_spark
 
-    spark = get_spark("rbds-diff-r11")
+    spark = get_spark("rbds-diff")
     qmap = queries_map()
     bad = []
     for name in names:

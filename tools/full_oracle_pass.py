@@ -1,10 +1,10 @@
-"""One-off FULL-catalog oracle pass at the driver's gate scale (sf0.01).
+"""FULL-catalog oracle pass at the driver's gate scale (sf0.01).
 
-VERDICT r10 ask #8 (stretch): the driver's per-round gate samples 50 of
-the catalog's queries, so a cohort's "latest green proof" can age several
-rounds even though the query is re-proven locally by every pytest run.
-This tool retires the vintage question outright: it runs EVERY registered
-catalog query through the same comparator the driver uses
+The driver's gate samples 50 of the catalog's queries, so a query's
+"latest green proof" can age even though it is re-proven locally by
+every pytest run. This tool retires the vintage question outright: it
+runs EVERY registered catalog query through the same comparator the
+driver uses
 (plans/oracle_check.py::check_query — row count + column names +
 order-insensitive value compare, bit-equal flagged separately) at
 /root/testdata/sf0.01, and commits the result as a supplementary record
@@ -16,9 +16,10 @@ Queries without an oracle (the genuinely non-SQL-expressible ops) are
 recorded with ``"oracle": null`` and a rows-only execution check —
 exactly the weaker check the driver records for them.
 
-One shared session, driver-like config (local[32], 32 shuffle
-partitions, AQE on) plus the hostile non-UTC timezone the stress suite
-uses — a pass here is strictly stronger than the driver's sampled gate.
+One shared engine session (``session.get_spark``: cores from
+``SPARK_GRAFT_CPUS``, heap from ``SPARK_GRAFT_DRIVER_MEM``) switched at
+runtime to the hostile non-UTC timezone the stress suite uses — a pass
+here is strictly stronger than the driver's sampled gate.
 """
 
 from __future__ import annotations
@@ -33,24 +34,17 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 OUT = os.path.join(REPO, "_artifacts", "oracle_full.json")
+TIMEZONE = "America/New_York"
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    from real_big_data_project_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("full-oracle-pass")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        # the stress suite's hostile session timezone: a query whose
-        # result depends on the session zone fails HERE, not at a
-        # driver whose zone we don't control
-        .config("spark.sql.session.timeZone", "America/New_York")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
+    spark = get_spark("full-oracle-pass")
+    # the stress suite's hostile session timezone: a query whose result
+    # depends on the session zone fails HERE, not at a driver whose zone
+    # we don't control
+    spark.conf.set("spark.sql.session.timeZone", TIMEZONE)
     spark.sparkContext.setLogLevel("ERROR")
 
     from real_big_data_project_spark.plans import catalog as C
@@ -92,7 +86,7 @@ def main() -> int:
               flush=True)
     record = {
         "sf_dir": SF_DIR,
-        "session_timezone": "America/New_York",
+        "session_timezone": TIMEZONE,
         "comparator": "plans/oracle_check.py::check_query (the driver "
                       "gate's comparator: rows + columns + "
                       "order-insensitive values; bit_equal flagged)",
