@@ -22,13 +22,17 @@ def strip_srd_prefix(col: Column | str) -> Column:
 
 def clean_price_string(col: Column | str) -> Column:
     """F2/P5 — scrub locale-dirty price strings to DOUBLE, NULL on failure
-    (etl/etl.py:189-193, :529): drop '(c)'-style markers and whitespace,
-    ',' decimal → '.', keep only [0-9.], then try_cast."""
+    (etl/etl.py:189-193, :529): ',' decimal → '.', keep only [0-9.-],
+    then try_cast.
+
+    The reference's chain first drops '(c)'-style markers and whitespace;
+    those steps delete only '()', ASCII letters and whitespace, none of
+    which is ',' or survives the keep-set filter, so one regex gives the
+    same string. It matters per tick: Catalyst pushes the `value > 0` and
+    inferred `isnotnull` filters through the projection, so the scrub runs
+    three times per raw tick."""
     c = F.col(col) if isinstance(col, str) else col
-    c = c.cast("string")
-    c = F.regexp_replace(c, r"\([a-zA-Z ]*\)", "")
-    c = F.regexp_replace(c, r"\s+", "")
-    c = F.regexp_replace(c, ",", ".")
+    c = F.translate(c.cast("string"), ",", ".")
     c = F.regexp_replace(c, r"[^0-9.\-]", "")
     return c.try_cast("double")
 

@@ -48,10 +48,12 @@ def tick_compression(
       * first or last tick of the whole series (subsumed by day endpoints,
         kept explicit to mirror the reference's mask)
 
-    Single pass: every mask term is a window over (key ORDER BY ts) or
-    (key, day ORDER BY ts) — Spark evaluates them in one shuffle on `key`
-    because the day partition is a prefix-compatible refinement evaluated
-    after the same sort.
+    One sort: every mask term is a lag/lead over the same (key ORDER BY
+    ts[, tiebreak]) window, so Spark plans one Window over one Sort. Day
+    endpoints are where the day changes against the neighbouring tick;
+    ts orders the ticks, so a day's ticks are contiguous in the series
+    and this keeps the same rows as first/last per (key, day) whenever
+    the ordering is total.
 
     `tiebreak` makes the ordering total when a series can carry duplicate
     timestamps (the reference leans on pandas' stable mergesort instead,
@@ -59,18 +61,15 @@ def tick_compression(
     nondeterministic.
     """
     day = F.col(ts).cast("date")
-    asc = [F.col(ts).asc()] + ([F.col(tiebreak).asc()] if tiebreak else [])
-    desc = [F.col(ts).desc()] + ([F.col(tiebreak).desc()] if tiebreak else [])
-    w = Window.partitionBy(key).orderBy(*asc)
-    wd_asc = Window.partitionBy(key, day).orderBy(*asc)
-    wd_desc = Window.partitionBy(key, day).orderBy(*desc)
+    order = [F.col(ts).asc()] + ([F.col(tiebreak).asc()] if tiebreak else [])
+    w = Window.partitionBy(key).orderBy(*order)
 
     prev = F.lag(price, 1).over(w)
     pct = pct_change(F.col(price), prev)
     keep = (
         (F.abs(pct) > min_change_pct)
-        | (F.row_number().over(wd_asc) == 1)
-        | (F.row_number().over(wd_desc) == 1)
+        | ~F.lag(day, 1).over(w).eqNullSafe(day)
+        | ~F.lead(day, 1).over(w).eqNullSafe(day)
         | prev.isNull()
         | (F.lead(price, 1).over(w).isNull())
     )

@@ -23,6 +23,7 @@ behavior (partition pruning) on the query side.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,8 +35,12 @@ from .schemas import MARKETS_SCHEMA, MARKETS_SEED
 
 
 def markets_dim(spark: SparkSession) -> DataFrame:
-    """The 10 seed market rows (etl/timescaledb_model.py:16-27)."""
-    return spark.createDataFrame(MARKETS_SEED, MARKETS_SCHEMA)
+    """The 10 seed market rows (etl/timescaledb_model.py:16-27).
+
+    Built from an Arrow table, which plans a LocalTableScan; a Python
+    list plans a scan of an RDD whose tasks start Python workers."""
+    table = pa.table(dict(zip(MARKETS_SCHEMA.names, map(list, zip(*MARKETS_SEED)))))
+    return spark.createDataFrame(table, MARKETS_SCHEMA)
 
 
 def clean_snapshots(raw: DataFrame) -> DataFrame:

@@ -124,6 +124,26 @@ def test_dimension_build_idempotent(spark, tables):
            [(r.id, r.symbol, r.name, r.mid) for r in b]
 
 
+def test_repeated_ingest_pass_compiles_no_new_classes(spark):
+    """A second identical ingest pass reuses the generated classes of the
+    first. One pass of this fixture compiles ~100 classes, more than
+    Spark's default codegen cache of 100 holds: at that default a repeat
+    recompiled 28-53 of them."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def ingest_pass():
+        raw = spark.createDataFrame(RAW_ROWS, RAW_SCHEMA)
+        eur = spark.createDataFrame(EURONEXT_ROWS, EURONEXT_SCHEMA)
+        for df in P.run_pipeline(spark, raw, euronext=eur).values():
+            df.write.format("noop").mode("overwrite").save()
+
+    ingest_pass()
+    before = compiles.getCount()
+    ingest_pass()
+    assert compiles.getCount() == before
+
+
 def test_compression_preserves_daily_ohlc(spark, sf_dir):
     """OHLC(compressed ticks) == OHLC(raw ticks) per (cid, day) — the
     invariant the reference's compression is designed to preserve

@@ -4,6 +4,8 @@ assert on `executedPlan` strings — cheap, no data execution."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -211,6 +213,26 @@ def test_operators_tolerate_degenerate_inputs(spark):
 
     no_pairs = spark.createDataFrame([], "doc_a long, doc_b long")
     assert dedup_components(no_pairs).count() == 0
+
+
+def test_tick_compression_plans_one_sort(qmap, spark, sf_dir):
+    """Every mask term of the compression is a lag/lead over one
+    (key ORDER BY ts, tiebreak) window: one Window over one Sort."""
+    plan = plan_of(qmap, spark, sf_dir, "q_tick_compression")
+    assert len(re.findall(r"(?m)^\W*Window \[", plan)) == 1, plan
+    assert len(re.findall(r"(?m)^\W*Sort \[", plan)) == 1, plan
+
+
+def test_markets_dim_is_a_local_table_scan(spark):
+    """The seed rows plan as a LocalTableScan (no Python worker) with the
+    declared schema."""
+    from real_big_data_project_spark.pipeline import markets_dim
+    from real_big_data_project_spark.schemas import MARKETS_SCHEMA
+
+    df = markets_dim(spark)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.lstrip().startswith("LocalTableScan"), plan
+    assert df.schema == MARKETS_SCHEMA
 
 
 def test_sequence_packing_has_no_global_corpus_window(qmap, spark, sf_dir):

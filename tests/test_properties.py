@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import re
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -38,6 +38,9 @@ def _py_clean_price(s: str) -> float | None:
 
 
 @given(st.lists(dirty_price, min_size=1, max_size=60))
+@example(["1\t234,5", "12\n,5", "1\u00a0234,50", " \t\r\n7 "])  # whitespace
+@example(["10,5 (c(d))", "(c)(d)12,3", "3,1 (c) (nd)", "(c)", "( )"])  # markers
+@example(["-", "1,2,3", "-1,5 (c)", "1-2", ",", "5,"])  # signs, separators
 @SET
 def test_clean_price_string_matches_python_reference(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "raw string")

@@ -93,3 +93,30 @@ def test_min_spark_version_pin(spark):
 
     with _pytest.raises(RuntimeError, match="requires Spark >= 4.0"):
         require_min_spark(_Fake())
+
+
+def test_small_codegen_cache_warns_once(spark, monkeypatch):
+    # The codegen cache size is static: a foreign session built with a
+    # smaller one cannot be fixed at runtime, only reported, once.
+    import warnings
+
+    from real_big_data_project_spark import session as S
+
+    class _Conf(dict):
+        def set(self, k, v):
+            self[k] = v
+
+    class _Fake:
+        version = "4.1.2"
+        conf = _Conf({S.CODEGEN_CACHE: "100"})
+
+    monkeypatch.setattr(S, "_codegen_cache_warned", False)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        S.ensure_session_confs(spark)  # the engine's own session: silent
+    with pytest.warns(RuntimeWarning,
+                      match="maxEntries=100 is below the engine's 1000"):
+        S.ensure_session_confs(_Fake())
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        S.ensure_session_confs(_Fake())  # once per process

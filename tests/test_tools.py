@@ -110,6 +110,21 @@ def test_ab_reports_wins_medians_and_spread(tmp_path, capsys):
     assert summary["failed_A"] == summary["failed_B"] == 0
 
 
+def test_ab_reads_every_metric_off_the_same_runs(tmp_path, capsys, monkeypatch):
+    monkeypatch.setattr(measure, "probe_s", lambda: 0.001)
+    code = ('import json, os; sec = float(os.environ["SEC"]); '
+            'print(json.dumps({"sec": sec, "rate": 1 / sec}))')
+    measure.main(["ab", "--leg", f"A={tmp_path}:SEC=2", "--leg", f"B={tmp_path}:SEC=1",
+                  "--pairs", "2", "--metric", "sec", "--metric", "rate", "--",
+                  sys.executable, "-c", code])
+    lines = [json.loads(ln) for ln in capsys.readouterr().out.splitlines()]
+    runs = [ln for ln in lines if "pair" in ln]
+    assert len(runs) == 4 and all({"sec", "rate"} <= set(ln) for ln in runs)
+    sec, rate = lines[-2:]
+    assert (sec["metric"], sec["median_B"], sec["wins_B"]) == ("sec", 1.0, 2)
+    assert (rate["metric"], rate["median_A"], rate["median_B"]) == ("rate", 0.5, 1.0)
+
+
 @pytest.mark.parametrize("fails, wins", [(1, 9), (5, 5)])
 def test_ab_failed_b_legs_count_against_the_gain(tmp_path, capsys, monkeypatch,
                                                  fails, wins):

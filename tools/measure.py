@@ -3,7 +3,7 @@
 
     python3 tools/measure.py profile NAME... [--sf-dir D] [--reps N] [--conf K=V]
     python3 tools/measure.py ab --leg A=TREE[:ENV=V,...] --leg B=TREE... \\
-        [--pairs N] --metric KEY -- CMD...
+        [--pairs N] --metric KEY [--metric KEY...] -- CMD...
     python3 tools/measure.py sweep {sf1,sf10,organic,organic_sf100} \\
         [--names a,b] [--base D --target D] [--resume]
 
@@ -16,7 +16,8 @@ over py4j, which answers with the UI off.
 ``profile`` splits a query into builder (driver-side Python plus the eager
 jobs it runs), Catalyst (phases from the query's own QueryExecution) and
 execution (rep walls of the built DataFrame, rep 1's jobs, tasks, executor
-time, shuffle and spill), and dumps its plan to
+time, shuffle and spill), counts the classes codegen compiled for it
+(build and reps, ``codegen_compiles`` / ``codegen_s``), and dumps its plan to
 ``plans/<git short sha>[-dirty]/<name>.txt`` so no change's dump overwrites
 another's. ``ab`` runs any command whose stdout ends in a JSON row from
 each leg's tree in a fresh process, alternating leg order per pair, with a
@@ -179,6 +180,17 @@ def catalyst_phases(df) -> dict:
     return out
 
 
+def codegen_totals(spark) -> tuple[int, float]:
+    """JVM-wide generated-code totals so far: classes compiled
+    (CodegenMetrics' compilation-time histogram count) and compile seconds
+    (CodeGenerator's compile-time accumulator). A query's delta shows
+    codegen cache thrash: a warm repeat should compile nothing."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e9
+
+
 def change_id() -> str:
     def git(*args):
         return subprocess.run(["git", *args], cwd=REPO, capture_output=True,
@@ -209,6 +221,7 @@ def cmd_profile(a) -> int:
     rows = []
     for i, name in enumerate(a.names):
         group = f"measure-{i}-{name}"
+        cg0 = codegen_totals(spark)
         sc.setJobGroup(f"{group}-build", name)
         t0 = time.perf_counter()
         df = qmap[name](spark, sf_dir)
@@ -219,9 +232,12 @@ def cmd_profile(a) -> int:
             sc.setJobGroup(f"{group}-rep{r}", name)
             walls.append(round(timed(spark, lambda: df), 4))
         sc._jsc.clearJobGroup()
+        cg1 = codegen_totals(spark)
         row = {"query": name, "build_s": round(build_s, 4),
                "build_jobs": group_metrics(spark, f"{group}-build")["jobs"],
                "catalyst_s": phases, "reps": walls,
+               "codegen_compiles": cg1[0] - cg0[0],
+               "codegen_s": round(cg1[1] - cg0[1], 3),
                **group_metrics(spark, f"{group}-rep0")}
         plan = sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
@@ -468,6 +484,29 @@ def _dig(row: dict, key: str):
     return row
 
 
+def ab_summary(metric: str, base: str, name: str, xs_all: list, ys_all: list,
+               n_pairs: int) -> dict:
+    """One metric's verdict over the pairs where both legs ran."""
+    pairs = [(x, y) for x, y in zip(xs_all, ys_all) if x is not None and y is not None]
+    if not pairs:
+        raise SystemExit(f"ab: no pair where both {base} and {name} ran")
+    xs, ys = [x for x, _ in pairs], [y for _, y in pairs]
+    q1, _, q3 = statistics.quantiles(xs, n=4) if len(xs) > 1 else (0, 0, 0)
+    wins = sum(y < x for x, y in pairs)
+    med_a, med_b = (round(statistics.median(v), 4) for v in (xs, ys))
+    fail_a, fail_b = xs_all.count(None), ys_all.count(None)
+    # the gain bar: B wins 9 in 10 of all pairs run, its median beats A's
+    # by more than A's interquartile spread, and it fails no more than A
+    return {
+        "metric": metric, "A": base, "B": name, "pairs": n_pairs,
+        f"failed_{base}": fail_a, f"failed_{name}": fail_b,
+        f"wins_{name}": wins, f"median_{base}": med_a,
+        f"median_{name}": med_b, f"iqr_{base}": round(q3 - q1, 4),
+        "gain": (wins >= 0.9 * n_pairs and med_a - med_b > q3 - q1
+                 and fail_b <= fail_a),
+    }
+
+
 def cmd_ab(a) -> int:
     cmd = a.cmd[1:] if a.cmd[:1] == ["--"] else a.cmd
     if not cmd:
@@ -478,37 +517,25 @@ def cmd_ab(a) -> int:
         tree, _, envs = rest.partition(":")
         env = dict(kv.split("=", 1) for kv in envs.split(",") if kv)
         legs.append((name, os.path.abspath(tree), env))
-    values: dict[str, list] = {name: [] for name, _, _ in legs}
+    values: dict[str, dict[str, list]] = {
+        name: {m: [] for m in a.metric} for name, _, _ in legs}
     for pair in range(a.pairs):
         for name, tree, env in (legs if pair % 2 == 0 else legs[::-1]):
             row = {"pair": pair, "leg": name, "probe_s": probe_s()}
             try:
-                row[a.metric] = _dig(run_child(cmd, LEG_TIMEOUT_S, tree, env), a.metric)
+                result = run_child(cmd, LEG_TIMEOUT_S, tree, env)
+                row.update({m: _dig(result, m) for m in a.metric})
             except Exception as exc:  # noqa: BLE001 — record and continue
                 row["error"] = f"{type(exc).__name__}: {exc}"[:300]
-            values[name].append(row.get(a.metric))
+            for m in a.metric:
+                values[name][m].append(row.get(m))
             print(json.dumps(row), flush=True)
     base = legs[0][0]
-    for name, _, _ in legs[1:]:
-        pairs = [(x, y) for x, y in zip(values[base], values[name])
-                 if x is not None and y is not None]
-        if not pairs:
-            raise SystemExit(f"ab: no pair where both {base} and {name} ran")
-        xs, ys = [x for x, _ in pairs], [y for _, y in pairs]
-        q1, _, q3 = statistics.quantiles(xs, n=4) if len(xs) > 1 else (0, 0, 0)
-        wins = sum(y < x for x, y in pairs)
-        med_a, med_b = (round(statistics.median(v), 4) for v in (xs, ys))
-        fail_a, fail_b = values[base].count(None), values[name].count(None)
-        # the gain bar: B wins 9 in 10 of all pairs run, its median beats A's
-        # by more than A's interquartile spread, and it fails no more than A
-        print(json.dumps({
-            "metric": a.metric, "A": base, "B": name, "pairs": a.pairs,
-            f"failed_{base}": fail_a, f"failed_{name}": fail_b,
-            f"wins_{name}": wins, f"median_{base}": med_a,
-            f"median_{name}": med_b, f"iqr_{base}": round(q3 - q1, 4),
-            "gain": (wins >= 0.9 * a.pairs and med_a - med_b > q3 - q1
-                     and fail_b <= fail_a),
-        }))
+    for metric in a.metric:
+        for name, _, _ in legs[1:]:
+            print(json.dumps(ab_summary(metric, base, name,
+                                        values[base][metric], values[name][metric],
+                                        a.pairs)))
     return 0
 
 
@@ -523,7 +550,10 @@ def main(argv: list[str] | None = None) -> int:
     pa = sub.add_parser("ab", help="paired fresh-process A/B; the first leg is A")
     pa.add_argument("--leg", action="append", required=True, metavar="NAME=TREE[:ENV=V,...]")
     pa.add_argument("--pairs", type=int, default=10)
-    pa.add_argument("--metric", required=True, help="dotted key; lower is better")
+    pa.add_argument("--metric", action="append", required=True,
+                    help="dotted key; lower is better. Repeat it to read more "
+                         "metrics off the same runs: one summary line each, "
+                         "in the order given")
     pa.add_argument("cmd", nargs=argparse.REMAINDER)
     ps = sub.add_parser("sweep", help="two-scale sweep, one fresh JVM per pick")
     ps.add_argument("sweep", choices=SWEEPS)
