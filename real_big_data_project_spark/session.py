@@ -9,7 +9,10 @@ the Pandas-UDF slow path.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import subprocess
 import warnings
 
 from pyspark.sql import SparkSession
@@ -82,6 +85,69 @@ CODEGEN_CACHE_ENTRIES = "1000"
 CODEGEN_ID_IN_NAME = "spark.sql.codegen.useIdInClassName"
 
 
+# Hadoop's local filesystem starts a shell process for every permission
+# change (`chmod`) and two for every FileContext rename (`readlink`) when
+# libhadoop is not loaded, as in a pip-installed pyspark: ~40 `chmod` and
+# ~90 `readlink` per dedup micro-batch, 237 `chmod` per ingest pass, and
+# each state store's commit waited on 16 of the `readlink`s per batch.
+# jvm/NioLocalFs.java does both calls in the JVM (java.nio.file) with the
+# same files, modes and .crc sidecars. get_spark compiles it once per
+# source and Hadoop jar set and loads it under both Hadoop APIs: FileSystem
+# (parquet writers, committers) and FileContext (streaming checkpoints,
+# state stores). Static: the classpath is fixed when the JVM starts. The
+# driver's classpath is enough because get_spark's local[N] sessions run
+# their tasks in the driver JVM.
+NIO_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "jvm", "NioLocalFs.java")
+NIO_FS = "real_big_data_project_spark.jvm.NioLocalFs"
+FILE_IMPL = "spark.hadoop.fs.file.impl"
+NIO_FS_CONFS = {FILE_IMPL: NIO_FS + "$Local",
+                "spark.hadoop.fs.AbstractFileSystem.file.impl": NIO_FS}
+
+# sessions get_spark built on Hadoop's classes because the source could
+# not be compiled; the first one in a process warns, later ones only count
+nio_fs_fallbacks = 0
+
+
+def _nio_fs_classpath() -> str | None:
+    """The dir holding NioLocalFs's compiled classes, published through
+    ``registry.ensure_fixture`` (keyed on the jars of the Spark home the
+    gateway launches and on the source, build-then-rename). None when
+    there is no ``javac`` or it fails: the session then runs on Hadoop's
+    classes."""
+    global nio_fs_fallbacks
+    from pyspark.find_spark_home import _find_spark_home
+
+    from .sources.registry import ensure_fixture
+
+    jars = os.path.join(_find_spark_home(), "jars")
+
+    def build_into(tmp: str) -> None:
+        javac = shutil.which("javac")
+        api = glob.glob(os.path.join(jars, "hadoop-client-api-*.jar"))
+        if javac is None or not api:
+            raise FileNotFoundError("no javac on PATH" if javac is None
+                                    else f"no hadoop-client-api jar in {jars}")
+        subprocess.run([javac, "-nowarn", "-cp", api[0], "-d", tmp,
+                        NIO_FS_SOURCE], check=True, capture_output=True,
+                       text=True)
+
+    with open(NIO_FS_SOURCE) as f:
+        source = f.read()
+    try:
+        return ensure_fixture("jvm", jars, build_into, params=source)
+    except (OSError, subprocess.CalledProcessError) as exc:
+        nio_fs_fallbacks += 1
+        if nio_fs_fallbacks == 1:
+            detail = ((getattr(exc, "stderr", None) or "").strip()
+                      or str(exc)).splitlines()[0]
+            warnings.warn(
+                "NioLocalFs not compiled, the session uses Hadoop's local "
+                f"filesystem (a shell process per chmod and readlink): {detail}",
+                RuntimeWarning, stacklevel=3)
+        return None
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -112,6 +178,11 @@ def get_spark(app_name: str = "real_big_data_project_spark",
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
+    classes = _nio_fs_classpath()
+    if classes is not None:
+        builder = builder.config("spark.driver.extraClassPath", classes)
+        for k, v in NIO_FS_CONFS.items():
+            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     require_min_spark(spark)
     spark.sparkContext.setLogLevel("WARN")
@@ -146,16 +217,17 @@ def require_min_spark(spark: SparkSession) -> None:
 def ensure_session_confs(spark: SparkSession) -> None:
     """Apply runtime-settable confs the engine depends on to a session we
     did not build (e.g. the verification driver's), warn about the static
-    one it cannot (the codegen cache size), and pin the minimum Spark
-    version while we're at it — this is the one hook every entry
-    path (our own get_spark, the grading driver via sources.registry,
-    the streaming readers) funnels through."""
+    ones it cannot (the codegen cache size, the local filesystem), and pin
+    the minimum Spark version while we're at it — this is the one hook
+    every entry path (our own get_spark, the grading driver via
+    sources.registry, the streaming readers) funnels through."""
     require_min_spark(spark)
     spark.conf.set(NANOS_AS_LONG, "true")
     spark.conf.set(OBJ_AGG_FALLBACK, OBJ_AGG_FALLBACK_KEYS)
     spark.conf.set(OPEN_COST, OPEN_COST_BYTES)
     spark.conf.set(CODEGEN_ID_IN_NAME, "false")
     _warn_small_codegen_cache(spark)
+    _warn_hadoop_local_fs(spark)
 
 
 _codegen_cache_warned = False
@@ -176,4 +248,25 @@ def _warn_small_codegen_cache(spark: SparkSession) -> None:
         f"{CODEGEN_CACHE_ENTRIES}; it is static, so repeated ingest passes "
         "in this session recompile their generated classes. Build the "
         "session with session.get_spark or set the conf at build time.",
+        RuntimeWarning, stacklevel=2)
+
+
+_local_fs_warned = False
+
+
+def _warn_hadoop_local_fs(spark: SparkSession) -> None:
+    """A session the engine did not build runs Hadoop's local filesystem,
+    and the classpath is fixed when its JVM starts, so the engine cannot
+    swap NioLocalFs in. Warn once per process (get_spark's own fallback
+    has warned already)."""
+    global _local_fs_warned
+    have = spark.conf.get(FILE_IMPL, None)
+    if _local_fs_warned or nio_fs_fallbacks or have == NIO_FS_CONFS[FILE_IMPL]:
+        return
+    _local_fs_warned = True
+    warnings.warn(
+        f"{FILE_IMPL}={have}: this session uses Hadoop's local filesystem, "
+        "which starts a shell process per chmod and per readlink (streaming "
+        "micro-batches and table writes pay for them). It is fixed when the "
+        "JVM starts: build the session with session.get_spark.",
         RuntimeWarning, stacklevel=2)

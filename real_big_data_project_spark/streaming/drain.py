@@ -19,12 +19,16 @@ State-store sizing: the drains pin ``spark.sql.shuffle.partitions`` for
 the duration of the stream to ``min(requested, defaultParallelism)`` —
 the drain's tuned store count (``DRAIN_SHUFFLE_PARTITIONS`` or its
 per-drain override), capped at the session's task slots. Every state
-store pays a data-independent commit in every micro-batch, measured at
-about 60-70 ms per store per batch on a 4-core box, the same with the
-checkpoint on tmpfs as on ext4. Stores beyond the slot count add another
-wave of that commit and no parallelism: a 2,500-event dedup batch on 4
-slots summed 960-1,090 ms of commitTimeMs over 16 stores (four waves)
-against 265-295 ms over 4 (one wave). A box with at least as many slots
+store commits in every micro-batch, and stores beyond the slot count add
+another wave of commits and no parallelism. On Hadoop's local filesystem
+a store's commit took about 60-70 ms per batch on a 4-core box, whatever
+the data and the disk: 16 `readlink` process starts per store per batch,
+two per checkpoint-file rename (session.py's NioLocalFs removes them).
+With the engine's filesystem a 2,500-event dedup batch on 4 slots sums
+9-12 ms of commitTimeMs over 4 stores (2-3 ms a store) and 58-60 ms over
+16 (about 4 ms a store, in four waves), and its trigger takes 196-230 ms
+against 350-401 ms (on Hadoop's: 255-293 and 1,105-1,179 ms of commits,
+405-464 and 1,006-1,034 ms of trigger). A box with at least as many slots
 as the tuned count keeps it unchanged. A continuous production job sizes
 this to its own state volume instead; results are
 partition-count-independent either way (tests/test_stress.py runs the

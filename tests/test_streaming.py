@@ -432,9 +432,9 @@ def test_stateful_pct_idle_series_evict(spark, provider):
 
 
 def test_drain_caps_state_stores_at_task_slots(spark):
-    """A drain runs at most one state store per task slot: each store pays
-    a data-independent commit every micro-batch, so stores beyond the
-    slot count only add commit waves. The dedup drain asks for 16 and
+    """A drain runs at most one state store per task slot: each store
+    commits every micro-batch, so stores beyond the slot count only add
+    commit waves. The dedup drain asks for 16 and
     runs min(16, slots); a drain asking for fewer keeps its count; the
     session's own shuffle-partition conf is restored either way."""
     from real_big_data_project_spark.streaming.dedup_stream import (

@@ -19,12 +19,14 @@ execution (rep walls of the built DataFrame, rep 1's jobs, tasks, executor
 time, shuffle and spill), counts the classes codegen compiled for it
 (build and reps, ``codegen_compiles`` / ``codegen_s``), and dumps its plan to
 ``plans/<git short sha>[-dirty]/<name>.txt`` so no change's dump overwrites
-another's. ``ab`` runs any command whose stdout ends in a JSON row from
-each leg's tree in a fresh process, alternating leg order per pair, with a
-fixed-work host-speed probe per leg (a shared host drifts several-fold in
-speed across hours). ``sweep`` prices a pick list at two scales with one
-fresh JVM per pick: a shared session accumulates localCheckpoint blocks and
-GC debt from heavy picks and inflates later ones.
+another's; its summary line counts the sessions that fell back to Hadoop's
+local filesystem (``nio_fs_fallbacks``). ``ab`` runs any command whose
+stdout ends in a JSON row from each leg's tree in a fresh process,
+alternating leg order per pair, with a fixed-work host-speed probe per leg
+(a shared host drifts several-fold in speed across hours). ``sweep``
+prices a pick list at two scales with one fresh JVM per pick: a shared
+session accumulates localCheckpoint blocks and GC debt from heavy picks
+and inflates later ones.
 """
 
 from __future__ import annotations
@@ -201,10 +203,10 @@ def change_id() -> str:
 
 
 def cmd_profile(a) -> int:
+    from real_big_data_project_spark import session
     from real_big_data_project_spark.plans import queries_map
-    from real_big_data_project_spark.session import get_spark
 
-    spark = get_spark("rbds-measure-profile")
+    spark = session.get_spark("rbds-measure-profile")
     for kv in a.conf:
         k, v = kv.split("=", 1)
         spark.conf.set(k, v)
@@ -250,6 +252,9 @@ def cmd_profile(a) -> int:
         "build_s": round(sum(r["build_s"] for r in rows), 4),
         "rep1_s": round(sum(r["reps"][0] for r in rows if r["reps"]), 4),
         "min_s": round(sum(min(r["reps"]) for r in rows if r["reps"]), 4),
+        # sessions on Hadoop's local filesystem (no javac): a shell
+        # process per chmod and readlink in every write and micro-batch
+        "nio_fs_fallbacks": session.nio_fs_fallbacks,
     }))
     return 0
 
