@@ -9,11 +9,17 @@ the Pandas-UDF slow path.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import glob
 import os
+import re
+import shlex
 import shutil
 import subprocess
+import uuid
 import warnings
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -107,14 +113,16 @@ NIO_FS_CONFS = {FILE_IMPL: NIO_FS + "$Local",
 # sessions get_spark built on Hadoop's classes because the source could
 # not be compiled; the first one in a process warns, later ones only count
 nio_fs_fallbacks = 0
+NIO_FS_JAR = "NioLocalFs.jar"
 
 
-def _nio_fs_classpath() -> str | None:
-    """The dir holding NioLocalFs's compiled classes, published through
-    ``registry.ensure_fixture`` (keyed on the jars of the Spark home the
-    gateway launches and on the source, build-then-rename). None when
-    there is no ``javac`` or it fails: the session then runs on Hadoop's
-    classes."""
+def _nio_fs_jar() -> str | None:
+    """NioLocalFs's compiled classes packed into one jar, published
+    through ``registry.ensure_fixture`` (keyed on the jars of the Spark
+    home the gateway launches and on the source, build-then-rename). A
+    jar, not a classes dir: a class-data-sharing archive refuses a
+    classpath that holds a non-empty directory. None when there is no
+    ``javac`` or it fails: the session then runs on Hadoop's classes."""
     global nio_fs_fallbacks
     from pyspark.find_spark_home import _find_spark_home
 
@@ -128,14 +136,23 @@ def _nio_fs_classpath() -> str | None:
         if javac is None or not api:
             raise FileNotFoundError("no javac on PATH" if javac is None
                                     else f"no hadoop-client-api jar in {jars}")
-        subprocess.run([javac, "-nowarn", "-cp", api[0], "-d", tmp,
+        classes = os.path.join(tmp, "classes")
+        subprocess.run([javac, "-nowarn", "-cp", api[0], "-d", classes,
                         NIO_FS_SOURCE], check=True, capture_output=True,
                        text=True)
+        with zipfile.ZipFile(os.path.join(tmp, NIO_FS_JAR), "w") as jar:
+            for root, _, files in os.walk(classes):
+                for name in sorted(files):
+                    path = os.path.join(root, name)
+                    jar.write(path, os.path.relpath(path, classes))
+        shutil.rmtree(classes)
 
     with open(NIO_FS_SOURCE) as f:
         source = f.read()
     try:
-        return ensure_fixture("jvm", jars, build_into, params=source)
+        return os.path.join(ensure_fixture("jvm", jars, build_into,
+                                           params=NIO_FS_JAR + "\n" + source),
+                            NIO_FS_JAR)
     except (OSError, subprocess.CalledProcessError) as exc:
         nio_fs_fallbacks += 1
         if nio_fs_fallbacks == 1:
@@ -146,6 +163,340 @@ def _nio_fs_classpath() -> str | None:
                 f"filesystem (a shell process per chmod and readlink): {detail}",
                 RuntimeWarning, stacklevel=3)
         return None
+
+
+# Class-data sharing (CDS). Nearly half of a driver JVM's start is class
+# loading: Spark SQL's ~22k classes are read from the Spark home's jars,
+# parsed and verified again in every process (`sun.cls.time` 4.4-5.2 s of
+# a 5.7-6.8 s get_spark on 4 cores). The first session per key runs with
+# -XX:DumpLoadedClassList, so its JVM writes the name of every class it
+# loads to a file, which costs the session no measurable time. Its exit
+# hook waits for that JVM to exit, dumps a static archive of the listed
+# classes with a -Xshare:dump JVM, checks the archive and publishes it
+# under _artifacts/ (build-then-rename). Later sessions map it with
+# -XX:SharedArchiveFile in place of the JDK's own archive and get those
+# classes pre-parsed and pre-verified: a `stream` run's set-up is about a
+# third shorter (PERF_NOTES "JVM start from a class-data-sharing
+# archive"). Not a dynamic archive (-XX:ArchiveClassesAtExit): the JVM
+# that records one runs slower throughout, and `stream` runs that did
+# took 13-55% longer to set up than without it (5 runs). CDS is
+# transparent to the classes it serves, so no plan, file or row changes.
+# The flags go in spark.driver.defaultJavaOptions, which leaves a
+# caller's spark.driver.extraJavaOptions alone. Static: fixed when the
+# JVM starts.
+CDS_JAVA_OPTS = "spark.driver.defaultJavaOptions"
+CDS_ARCHIVE = "driver.jsa"
+CDS_CLASS_LIST = "classes.lst"
+# the recording JVM's java.class.path, published beside the archive:
+# HotSpot maps the archive only into a JVM whose classpath starts with it
+CDS_CLASSPATH = "classpath"
+# the -Xshare:dump JVM takes 37-66 s on 4 cores; a slower one (or a
+# recording JVM that does not exit) is killed
+CDS_DUMP_WAIT_S = 300
+# HotSpot turns compressed oops off for a heap this large, and an archive
+# dumped in one mode does not map in the other
+NO_COOPS_HEAP = 32 << 30
+
+# sessions get_spark started without an archive (the cause is in
+# cds_state); the first one in a process warns, later ones only count
+cds_fallbacks = 0
+# "mapped <archive>", "dumping <archive>" (at exit), or why the last
+# driver JVM get_spark started has no archive
+cds_state = "no driver JVM started"
+
+
+class _NoCds(Exception):
+    """Why a driver JVM starts without a class-data-sharing archive."""
+
+
+def _cds_fallback(cause: str) -> None:
+    global cds_fallbacks, cds_state
+    cds_fallbacks += 1
+    cds_state = f"fallback: {cause}"
+    if cds_fallbacks == 1:
+        warnings.warn(
+            "the driver JVM runs without the engine's class-data-sharing "
+            f"archive (it loads every class from the jars again): {cause}",
+            RuntimeWarning, stacklevel=4)
+
+
+def _heap_bytes(memory: str) -> int:
+    m = re.fullmatch(r"(\d+)([kmgt])b?", memory.strip().lower())
+    if m is None:
+        raise _NoCds(f"driver memory {memory!r} is not a JVM heap size")
+    return int(m[1]) << {"k": 10, "m": 20, "g": 30, "t": 40}[m[2]]
+
+
+def _stat(path: str) -> str:
+    st = os.stat(path)
+    return f"{path}:{st.st_mtime_ns}:{st.st_size}"
+
+
+def _caller_classpath() -> str:
+    """What a caller adds to the driver JVM's classpath: SPARK_DIST_CLASSPATH
+    and the driver classpath options in PYSPARK_SUBMIT_ARGS."""
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    given = [v for k, v in zip(args, args[1:]) if k == "--driver-class-path"]
+    given += [a for a in args if a.startswith("spark.driver.extraClassPath=")]
+    return "\n".join([os.environ.get("SPARK_DIST_CLASSPATH", "")] + given)
+
+
+def _first_line(text: str) -> str:
+    return next(filter(None, (ln.strip("# ") for ln in text.splitlines())), "")
+
+
+class _Cds:
+    """The archive a driver JVM with this heap and NioLocalFs jar maps,
+    or records the classes for when it is not published yet, keyed on
+    everything the archive depends on: the JDK (home, version, the files
+    under lib/server), the Spark jars, the NioLocalFs jar, the conf dir,
+    what the caller adds to the classpath and the compressed-oops mode.
+    Raises _NoCds when the classpath cannot be archived or the JDK has
+    no archive of its own for this heap."""
+
+    def __init__(self, memory: str, jar: str | None):
+        from pyspark.find_spark_home import _find_spark_home
+
+        from .sources import registry
+
+        for var in ("HADOOP_CONF_DIR", "YARN_CONF_DIR"):
+            if os.environ.get(var):
+                raise _NoCds(f"{var} is set (it adds its dir to the classpath)")
+        # the launcher puts the conf dir first on the classpath; Spark
+        # reads nothing from one that holds only *.template files, so the
+        # gateway may start from an empty one instead
+        spark_home = _find_spark_home()
+        conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        real = sorted(n for n in (os.listdir(conf) if os.path.isdir(conf) else ())
+                      if not n.endswith(".template"))
+        if real:
+            raise _NoCds(f"the Spark conf dir {conf} holds {real[0]}")
+        self.conf_dir = os.path.join(registry.ARTIFACTS, "cds_conf")
+        os.makedirs(self.conf_dir, exist_ok=True)
+        if os.listdir(self.conf_dir):
+            raise _NoCds(f"{self.conf_dir} is not empty")
+
+        # the JDK spark-class runs
+        home = os.environ.get("JAVA_HOME")
+        if not home:
+            java = shutil.which("java")
+            if java is None:
+                raise _NoCds("no java on PATH")
+            home = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+        self.java = os.path.join(home, "bin", "java")
+        self.memory = memory
+        coops = _heap_bytes(memory) < NO_COOPS_HEAP
+        server = os.path.join(home, "lib", "server")
+        if not os.path.isfile(os.path.join(
+                server, "classes.jsa" if coops else "classes_nocoops.jsa")):
+            raise _NoCds(f"the JDK at {home} has no archive of its own for this heap")
+        vm = ""
+        if os.path.isfile(os.path.join(home, "release")):
+            with open(os.path.join(home, "release")) as f:
+                vm = f.read()
+        self.jars = os.path.join(spark_home, "jars")
+        self.params = "\n".join(
+            [f"java.home={os.path.realpath(home)}", vm, f"coops={coops}",
+             f"conf={self.conf_dir}", f"jar={jar and _stat(jar)}",
+             f"caller classpath={_caller_classpath()}"]
+            + [_stat(p) for p in sorted(glob.glob(os.path.join(server, "*")))])
+        self.out = registry.fixture_path("cds", self.jars, self.params)
+        self.dump = self.classpath = None
+
+    def java_options(self) -> str:
+        """The flags that map the published archive, or else record the
+        names of the classes the JVM loads into a fresh dump dir."""
+        if os.path.exists(os.path.join(self.out, "_SUCCESS")):
+            with contextlib.suppress(OSError), \
+                    open(os.path.join(self.out, CDS_CLASSPATH)) as f:
+                self.classpath = f.read()
+            self.flags = [f"-XX:SharedArchiveFile={os.path.join(self.out, CDS_ARCHIVE)}"]
+        else:
+            self._sweep_dead_dumps()
+            self.dump = f"{self.out}.dump.{os.getpid()}.{uuid.uuid4().hex}"
+            os.makedirs(self.dump)
+            self.flags = [f"-XX:DumpLoadedClassList={os.path.join(self.dump, CDS_CLASS_LIST)}"]
+        return " ".join(shlex.quote(f) for f in self.flags)
+
+    def _sweep_dead_dumps(self) -> None:
+        """Dump dirs whose Python process died before it could publish
+        (a killed run; its JVMs may still be writing there)."""
+        for d in glob.glob(f"{self.out}.dump.*"):
+            try:
+                os.kill(int(d.rsplit(".", 2)[1]), 0)
+            except ProcessLookupError:
+                shutil.rmtree(d, ignore_errors=True)
+            except (ValueError, PermissionError):
+                pass
+
+    def discard(self) -> str:
+        """After a failed start or an archive the JVM did not map: drop
+        the dump dir, or else check the published archive and remove it
+        if it does not map (the JVM may have died or skipped it for
+        another reason, and then the archive is kept). Returns what was
+        done."""
+        if self.dump is not None:
+            shutil.rmtree(self.dump, ignore_errors=True)
+            return "no archive was mapped"
+        # checked under another name, so no other session maps it meanwhile
+        aside = f"{self.out}.bad.{uuid.uuid4().hex}"
+        try:
+            os.rename(self.out, aside)
+        except OSError as exc:
+            return f"moving {self.out} aside failed: {exc}"
+        why = self._unmappable(os.path.join(aside, CDS_ARCHIVE), self.classpath or "", aside)
+        if why is None:
+            with contextlib.suppress(OSError):
+                os.rename(aside, self.out)
+            shutil.rmtree(aside, ignore_errors=True)  # another session published one
+            return "the archive still maps and was kept"
+        shutil.rmtree(aside, ignore_errors=True)
+        return f"the archive was removed: {why}"
+
+    def finish_dump(self, proc, classpath: str) -> None:
+        """The exit hook of a recording session: let its JVM exit, so the
+        class list is complete and no JVM outlives its Python process,
+        then dump the listed classes and publish the archive if it maps."""
+        from pyspark import SparkContext
+
+        from .sources.registry import ensure_fixture
+
+        try:
+            try:
+                if SparkContext._active_spark_context is not None:
+                    SparkContext._active_spark_context.stop()
+            finally:
+                proc.stdin.close()  # the gateway JVM exits when its stdin closes
+                try:
+                    rc = proc.wait(CDS_DUMP_WAIT_S)
+                except subprocess.TimeoutExpired:
+                    proc.kill()
+                    rc = proc.wait()
+            cause = (f"the recording driver JVM exited with code {rc}" if rc != 0
+                     else self._dump(classpath))
+            if cause is not None:
+                _cds_fallback(cause)
+                return
+            with open(os.path.join(self.dump, CDS_CLASSPATH), "w") as f:
+                f.write(classpath)
+            ensure_fixture("cds", self.jars,
+                           lambda tmp: os.rename(self.dump, tmp), self.params)
+        finally:
+            shutil.rmtree(self.dump, ignore_errors=True)
+
+    def _jvm_flags(self, scratch: str) -> list[str]:
+        """Flags of the helper JVMs: the session's heap (its compressed-oops
+        mode), no perf data file, a crash report inside ``scratch``."""
+        return [f"-Xmx{self.memory}", "-XX:-UsePerfData",
+                f"-XX:ErrorFile={scratch}/hs_err_pid%p.log"]
+
+    def _dump(self, classpath: str) -> str | None:
+        """Why the recorded classes gave no archive that may be published,
+        or None. A -Xshare:dump JVM with the session's classpath and heap
+        writes the archive; only one a -Xshare:on JVM then maps is kept."""
+        jsa = os.path.join(self.dump, CDS_ARCHIVE)
+        try:
+            res = subprocess.run(
+                [self.java, "-Xshare:dump",
+                 f"-XX:SharedClassListFile={os.path.join(self.dump, CDS_CLASS_LIST)}",
+                 f"-XX:SharedArchiveFile={jsa}", *self._jvm_flags(self.dump),
+                 "-cp", classpath],
+                cwd=self.dump, capture_output=True, text=True, timeout=CDS_DUMP_WAIT_S)
+        except subprocess.TimeoutExpired:
+            return f"the archive dump took over {CDS_DUMP_WAIT_S} s"
+        if res.returncode != 0:
+            # it prints a warning per listed class it cannot archive first
+            said = "\n".join(ln for ln in (res.stdout + res.stderr).splitlines()
+                              if "Preload Warning" not in ln and "Skipping" not in ln)
+            return (f"the archive dump exited with code {res.returncode}: "
+                    f"{_first_line(said)}")
+        why = self._unmappable(jsa, classpath, self.dump)
+        return None if why is None else f"the dumped archive {why}"
+
+    def _unmappable(self, jsa: str, classpath: str, scratch: str) -> str | None:
+        """Why a -Xshare:on JVM with this classpath and heap does not map
+        ``jsa``, or None."""
+        res = subprocess.run(
+            [self.java, "-Xshare:on", f"-XX:SharedArchiveFile={jsa}",
+             *self._jvm_flags(scratch), "-cp", classpath, "-version"],
+            cwd=scratch, capture_output=True, text=True)
+        if res.returncode == 0:
+            return None
+        return (f"does not map (-Xshare:on exit {res.returncode}): "
+                f"{_first_line(res.stdout + res.stderr)}")
+
+
+@contextlib.contextmanager
+def _env(name: str, value: str):
+    old = os.environ.get(name)
+    os.environ[name] = value
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ[name]
+        else:
+            os.environ[name] = old
+
+
+def _start_with_cds(build, memory: str, jar: str | None) -> SparkSession:
+    """``build(**confs)`` with the class-data-sharing flags when this
+    call starts the driver JVM. A JVM that dies before the gateway
+    connects with an archive mapped is retried once without them, after
+    the archive is removed if it does not map."""
+    global cds_state
+    from pyspark import SparkContext
+    from pyspark.errors import PySparkRuntimeError
+
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return build()  # the driver JVM runs already; its flags are fixed
+    try:
+        cds = _Cds(memory, jar)
+    except _NoCds as exc:
+        _cds_fallback(str(exc))
+        return build()
+    try:
+        with _env("SPARK_CONF_DIR", cds.conf_dir):
+            spark = build(**{CDS_JAVA_OPTS: cds.java_options()})
+    except PySparkRuntimeError as exc:
+        if exc.getCondition() != "JAVA_GATEWAY_EXITED":
+            raise
+        _cds_fallback(f"the driver JVM exited at start with {cds.flags[0]}; "
+                      f"{cds.discard()}")
+        return build()
+    if cds.dump is None:
+        # the engine's archive replaces the JDK's, so the JVM reports
+        # sharing only when it mapped ours; under the default -Xshare:auto
+        # it runs without a word when it cannot (another classpath, a
+        # damaged file)
+        info = spark.sparkContext._jvm.System.getProperty("java.vm.info")
+        if "sharing" in info:
+            cds_state = f"mapped {cds.out}"
+        else:
+            _cds_fallback(f"the driver JVM did not map {cds.flags[0]} "
+                          f"({info}); {cds.discard()}")
+    else:
+        cds_state = f"dumping {cds.out}"
+        atexit.register(cds.finish_dump, SparkContext._gateway.proc,
+                        spark.sparkContext._jvm.System.getProperty("java.class.path"))
+    return spark
+
+
+def driver_shared_classes(spark: SparkSession) -> int | None:
+    """How many classes the driver JVM took from class-data-sharing
+    archives (`java.cls.sharedLoadedClasses`, read with `jcmd`): about
+    1.2k from the JDK's own archive, 12k and more with the engine's.
+    None without `jcmd` or when the JVM keeps no perf data."""
+    jcmd = shutil.which("jcmd")
+    if jcmd is None:
+        return None
+    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    out = subprocess.run([jcmd, str(pid), "PerfCounter.print"],
+                         capture_output=True, text=True).stdout
+    for line in out.splitlines():
+        if line.startswith("java.cls.sharedLoadedClasses="):
+            return int(line.split("=", 1)[1])
+    return None
 
 
 def default_parallelism() -> int:
@@ -161,29 +512,31 @@ def get_spark(app_name: str = "real_big_data_project_spark",
     less critical than it used to be.
     """
     n = cpus or default_parallelism()
-    builder = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(NANOS_AS_LONG, "true")
-        .config(OBJ_AGG_FALLBACK, OBJ_AGG_FALLBACK_KEYS)
-        .config(OPEN_COST, OPEN_COST_BYTES)
-        .config(CODEGEN_CACHE, CODEGEN_CACHE_ENTRIES)
-        .config(CODEGEN_ID_IN_NAME, "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    )
-    classes = _nio_fs_classpath()
-    if classes is not None:
-        builder = builder.config("spark.driver.extraClassPath", classes)
-        for k, v in NIO_FS_CONFS.items():
-            builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    confs = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        NANOS_AS_LONG: "true",
+        OBJ_AGG_FALLBACK: OBJ_AGG_FALLBACK_KEYS,
+        OPEN_COST: OPEN_COST_BYTES,
+        CODEGEN_CACHE: CODEGEN_CACHE_ENTRIES,
+        CODEGEN_ID_IN_NAME: "false",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": memory,
+    }
+    jar = _nio_fs_jar()
+    if jar is not None:
+        confs = {**confs, "spark.driver.extraClassPath": jar, **NIO_FS_CONFS}
+
+    def build(**extra: str) -> SparkSession:
+        return (SparkSession.builder.master(f"local[{n}]").appName(app_name)
+                .config(map={**confs, **extra}).getOrCreate())
+
+    spark = _start_with_cds(build, memory, jar)
     require_min_spark(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -78,6 +78,12 @@ def _recovery_lock_age(lock: str) -> float:
         return -1.0
 
 
+def fixture_path(name: str, sf_dir: str, params: str = "") -> str:
+    """Where ``ensure_fixture`` publishes ``name`` for these inputs."""
+    sig = hashlib.sha1(params.encode()).hexdigest()[:10]
+    return os.path.join(ARTIFACTS, f"{name}_{fixture_tag(sf_dir)}_{sig}")
+
+
 def ensure_fixture(name: str, sf_dir: str, build_into, params: str = "") -> str:
     """The ONE publish path for every derived fixture dir under
     ``ARTIFACTS`` (source-format scans, ground-truth and index tables,
@@ -107,8 +113,7 @@ def ensure_fixture(name: str, sf_dir: str, build_into, params: str = "") -> str:
     import shutil
     import uuid as _uuid
 
-    sig = hashlib.sha1(params.encode()).hexdigest()[:10]
-    out = os.path.join(ARTIFACTS, f"{name}_{fixture_tag(sf_dir)}_{sig}")
+    out = fixture_path(name, sf_dir, params)
     success = os.path.join(out, "_SUCCESS")
     if not os.path.exists(success):
         tmp = f"{out}.build.{_uuid.uuid4().hex}"

@@ -223,6 +223,19 @@ def test_tick_compression_plans_one_sort(qmap, spark, sf_dir):
     assert len(re.findall(r"(?m)^\W*Sort \[", plan)) == 1, plan
 
 
+def test_price_scrub_replaces_without_translate(spark):
+    """The clean stage's ',' -> '.' is a byte search (`replace`), not
+    `translate`, which decodes every tick's string and looks each of its
+    characters up in a HashMap."""
+    from real_big_data_project_spark.pipeline import clean_snapshots
+
+    raw = spark.range(3).selectExpr(
+        "'SRD ACME' AS name", "concat(CAST(id AS STRING), ',5') AS last",
+        "'1rPACME' AS symbol", "id + 1 AS volume")
+    plan = clean_snapshots(raw)._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"(?<!regexp_)replace\(", plan) and "translate(" not in plan, plan
+
+
 def test_markets_dim_is_a_local_table_scan(spark):
     """The seed rows plan as a LocalTableScan (no Python worker) with the
     declared schema."""

@@ -20,7 +20,9 @@ time, shuffle and spill), counts the classes codegen compiled for it
 (build and reps, ``codegen_compiles`` / ``codegen_s``), and dumps its plan to
 ``plans/<git short sha>[-dirty]/<name>.txt`` so no change's dump overwrites
 another's; its summary line counts the sessions that fell back to Hadoop's
-local filesystem (``nio_fs_fallbacks``). ``ab`` runs any command whose
+local filesystem (``nio_fs_fallbacks``) and gives the driver JVM's
+class-data-sharing state (``cds``: mapped, dumping, or the fallback
+cause; ``cds_fallbacks``; ``shared_loaded_classes``). ``ab`` runs any command whose
 stdout ends in a JSON row from each leg's tree in a fresh process,
 alternating leg order per pair, with a fixed-work host-speed probe per leg
 (a shared host drifts several-fold in speed across hours). ``sweep``
@@ -255,6 +257,11 @@ def cmd_profile(a) -> int:
         # sessions on Hadoop's local filesystem (no javac): a shell
         # process per chmod and readlink in every write and micro-batch
         "nio_fs_fallbacks": session.nio_fs_fallbacks,
+        # the driver JVM's class-data-sharing archive: mapped, dumping,
+        # or why it has none; classes it took from archives (jcmd)
+        "cds": session.cds_state,
+        "cds_fallbacks": session.cds_fallbacks,
+        "shared_loaded_classes": session.driver_shared_classes(spark),
     }))
     return 0
 
