@@ -98,17 +98,18 @@ def _canonicalize(df: pd.DataFrame) -> pd.DataFrame:
     return out.drop(columns=list(rounded))
 
 
-def compare(name: str, spark_df, oracle_df: pd.DataFrame) -> CompareResult:
-    sp = spark_df.toPandas()
-    rc = len(sp) == len(oracle_df)
-    cols_sp, cols_or = sorted(sp.columns), sorted(oracle_df.columns)
-    cm = cols_sp == cols_or
+def compare_frames(name: str, got: pd.DataFrame, want: pd.DataFrame) -> CompareResult:
+    """Compare two result frames order-insensitively: row count, column
+    names, then values (floats close within rtol=1e-9, bit-equal flagged)."""
+    rc = len(got) == len(want)
+    cols_got, cols_want = sorted(got.columns), sorted(want.columns)
+    cm = cols_got == cols_want
     if not (rc and cm):
         return CompareResult(
             name, rc, cm, False, False,
-            detail=f"rows {len(sp)} vs {len(oracle_df)}; cols {cols_sp} vs {cols_or}",
+            detail=f"rows {len(got)} vs {len(want)}; cols {cols_got} vs {cols_want}",
         )
-    a, b = _canonicalize(sp), _canonicalize(oracle_df)
+    a, b = _canonicalize(got), _canonicalize(want)
     close = True
     bit_equal = True
     detail = ""
@@ -126,6 +127,10 @@ def compare(name: str, spark_df, oracle_df: pd.DataFrame) -> CompareResult:
                     close = False
                     i = int(np.argmax(~near))
                     detail += f" col {c} differs at sorted row {i}: {avf[i]!r} vs {bvf[i]!r};"
+                else:
+                    i = int(np.argmax(~eq))
+                    detail += (f" col {c} not bit-equal at sorted row {i}: "
+                               f"{avf[i]!r} vs {bvf[i]!r};")
         else:
             if not av.equals(bv):
                 neq = av != bv
@@ -149,4 +154,4 @@ def check_query(spark: SparkSession, name: str, sf_dir: str) -> CompareResult:
         return CompareResult(name, True, True, n > 0, True, detail=f"rows-only: {n}")
     sdf = spec.builder(spark, sf_dir)
     odf = duckdb_oracle(spec.oracle, sf_dir)
-    return compare(name, sdf, odf)
+    return compare_frames(name, sdf.toPandas(), odf)

@@ -54,25 +54,6 @@ COMPANIES_SCHEMA = T.StructType([
     T.StructField("sector3", T.StringType(), True),
 ])
 
-STOCKS_SCHEMA = T.StructType([
-    T.StructField("date", T.TimestampType(), False),
-    T.StructField("cid", T.IntegerType(), False),
-    T.StructField("value", T.FloatType(), True),
-    T.StructField("volume", T.FloatType(), True),
-])
-
-DAYSTOCKS_SCHEMA = T.StructType([
-    T.StructField("date", T.TimestampType(), False),
-    T.StructField("cid", T.IntegerType(), False),
-    T.StructField("open", T.FloatType(), True),
-    T.StructField("close", T.FloatType(), True),
-    T.StructField("high", T.FloatType(), True),
-    T.StructField("low", T.FloatType(), True),
-    T.StructField("volume", T.FloatType(), True),
-    T.StructField("mean", T.FloatType(), True),
-    T.StructField("std", T.FloatType(), True),
-])
-
 # --- symbol / market normalization constants -------------------------------
 # Boursorama symbol prefixes → market id (etl/etl.py:55-64). Order matters:
 # longer prefixes must be tested first so '1rP' wins over '1r…' lookalikes.

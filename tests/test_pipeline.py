@@ -198,7 +198,7 @@ def test_incremental_daystocks_equals_full_rebuild(spark, sf_dir):
     from real_big_data_project_spark.pipeline import (
         build_daystocks, incremental_daystocks,
     )
-    from real_big_data_project_spark.plans.oracle_check import compare
+    from real_big_data_project_spark.plans.oracle_check import compare_frames
     from real_big_data_project_spark.sources.registry import events_with_volume
 
     ev = events_with_volume(spark, sf_dir).select(
@@ -212,7 +212,7 @@ def test_incremental_daystocks_equals_full_rebuild(spark, sf_dir):
     prior = build_daystocks(early, tiebreak="event_id")
     incr = incremental_daystocks(prior, ev, late, tiebreak="event_id")
 
-    res = compare("incremental_daystocks", incr, full.toPandas())
+    res = compare_frames("incremental_daystocks", incr.toPandas(), full.toPandas())
     assert res.ok and res.values_bit_equal, res.detail
 
 

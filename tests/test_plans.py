@@ -4,6 +4,7 @@ assert on `executedPlan` strings — cheap, no data execution."""
 
 from __future__ import annotations
 
+import json
 import re
 
 import pytest
@@ -414,50 +415,48 @@ def test_simjoin_prefix_never_goes_all_pairs(qmap, spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_riskiest_prefix_names_are_registered():
-    # Phantom rotation entries (VERDICT r5 Wrong #1) must fail loudly.
-    from real_big_data_project_spark.plans.catalog import (
-        _RISKIEST, QUERIES, _load_all,
-    )
-
-    _load_all()
-    missing = [n for n in _RISKIEST if n not in QUERIES]
-    assert missing == []
+def _write_record(records_dir, rnd, green=(), red=()):
+    row = {"rows_match": True, "schema_match": True, "hash_match": True}
+    rows = {q: row for q in green}
+    rows.update({q: {**row, "hash_match": False} for q in red})
+    with open(records_dir / f"CORRECTNESS_r{rnd:02d}.json", "w") as f:
+        json.dump(rows, f)
 
 
-def test_rotation_prefix_is_generated():
-    """The committed gate prefix must match gen_rotation on the live
-    CORRECTNESS_r*.json set.
+def test_gate_order_lists_every_registered_query_by_name_without_records(
+        monkeypatch, tmp_path):
+    import __spark_entry__ as e
 
-    Round 8 silently re-proved round 7's identical 50-query sample because
-    ``_RISKIEST`` is hand-pasted (VERDICT r8 item 1).  This test makes that
-    structurally impossible: the moment the driver lands a new
-    CORRECTNESS_r{N}.json, ``compute_prefix`` shifts (newly-proven queries
-    fall to the back, stale ones surface) and this assertion fails until
-    someone re-runs ``python tools/gen_rotation.py`` and pastes the fresh
-    block into catalog.py.
-    """
-    import os
-    import sys
+    monkeypatch.setattr(e, "RECORDS_DIR", str(tmp_path))
+    qs = e.queries()
+    assert len(qs) == 175
+    assert list(qs) == sorted(queries_map())
 
-    sys.path.insert(0, os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
-    import gen_rotation
 
-    from real_big_data_project_spark.plans.catalog import (
-        _PINNED, _RISKIEST, _ROTATION_VINTAGE,
-    )
+def test_gate_order_leads_with_a_never_gated_query(tmp_path):
+    import __spark_entry__ as e
 
-    assert _ROTATION_VINTAGE == gen_rotation.newest_round(), (
-        f"prefix generated from CORRECTNESS round {_ROTATION_VINTAGE} but "
-        f"round {gen_rotation.newest_round()} exists — rerun "
-        "`python tools/gen_rotation.py` and paste the block into catalog.py"
-    )
-    expected = tuple(gen_rotation.compute_prefix(_PINNED))
-    assert _RISKIEST == expected, (
-        "catalog._RISKIEST is stale vs gen_rotation.compute_prefix — "
-        "rerun `python tools/gen_rotation.py` and paste the block"
-    )
+    names = sorted(queries_map())
+    _write_record(tmp_path, 1, green=names[:-1])
+    assert e.gate_order(names, str(tmp_path))[0] == names[-1]
+
+
+def test_gate_order_puts_the_newest_greens_behind_older_ones(tmp_path):
+    import __spark_entry__ as e
+
+    names = sorted(queries_map())
+    newest = names[::3][:50]
+    older = [q for q in names if q not in newest]
+    assert len(older) >= 50
+    _write_record(tmp_path, 1, green=names)
+    # a red row in the newest record leaves its query's older green round
+    _write_record(tmp_path, 2, green=newest, red=older[:1])
+    order = e.gate_order(names, str(tmp_path))
+    assert not set(order[:50]) & set(newest)
+    assert order == older + newest
+    # a newer record moves its queries to the back
+    _write_record(tmp_path, 3, green=older[:5])
+    assert e.gate_order(names, str(tmp_path)) == older[5:] + newest + older[:5]
 
 
 def test_dashboard_session_composes_lazily(qmap, spark, sf_dir):

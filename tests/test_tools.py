@@ -165,9 +165,26 @@ def test_partial_or_rescaled_sweep_never_writes_the_committed_record(
     assert seen == [committed, scratch, scratch, committed]
 
 
-@pytest.mark.parametrize("sub", ["profile", "ab", "sweep"])
+@pytest.mark.parametrize("sub", ["profile", "ab", "sweep", "oracle"])
 def test_subcommand_help_exits_zero(sub):
     p = subprocess.run([sys.executable, MEASURE, sub, "--help"],
                        capture_output=True, text=True, timeout=60)
     assert p.returncode == 0, p.stderr
     assert "usage:" in p.stdout
+
+
+def test_compare_frames_ignores_row_order_but_not_one_ulp_or_a_string():
+    import numpy as np
+    import pandas as pd
+
+    from real_big_data_project_spark.plans.oracle_check import compare_frames
+
+    want = pd.DataFrame({"k": [1, 2, 3], "s": ["a", "b", "c"],
+                         "x": [0.1, 0.2, 0.3]})
+    res = compare_frames("q", want.iloc[::-1].reset_index(drop=True), want)
+    assert res.ok and res.values_bit_equal
+    ulp = want.assign(x=[0.1, np.nextafter(0.2, 1.0), 0.3])
+    res = compare_frames("q", ulp, want)
+    assert res.ok and not res.values_bit_equal and "col x not bit-equal" in res.detail
+    res = compare_frames("q", want.assign(s=["a", "B", "c"]), want)
+    assert not res.ok and not res.values_bit_equal

@@ -95,15 +95,11 @@ HEADLINERS = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from real_big_data_project_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .appName("gen-plans")
-        .getOrCreate()
-    )
+    # the engine's own session, static confs included; 8 cores and so 8
+    # shuffle partitions, whatever the box
+    spark = get_spark("gen-plans", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     from real_big_data_project_spark.plans import queries_map
 

@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
-"""One measurement CLI for the engine: profile, ab and sweep.
+"""One measurement CLI for the engine: profile, ab, sweep and oracle.
 
     python3 tools/measure.py profile NAME... [--sf-dir D] [--reps N] [--conf K=V]
     python3 tools/measure.py ab --leg A=TREE[:ENV=V,...] --leg B=TREE... \\
         [--pairs N] --metric KEY [--metric KEY...] -- CMD...
     python3 tools/measure.py sweep {sf1,sf10,organic,organic_sf100} \\
         [--names a,b] [--base D --target D] [--resume]
+    python3 tools/measure.py oracle duckdb [--sf-dir D]
+    python3 tools/measure.py oracle {dump,check} NAME... [--sf-dir D]
 
 Spark runs on ``session.get_spark`` only (size the heap with
 SPARK_GRAFT_DRIVER_MEM). One timer: a GC barrier, then the noop writer, not
@@ -28,7 +30,13 @@ alternating leg order per pair, with a fixed-work host-speed probe per leg
 (a shared host drifts several-fold in speed across hours). ``sweep``
 prices a pick list at two scales with one fresh JVM per pick: a shared
 session accumulates localCheckpoint blocks and GC debt from heavy picks
-and inflates later ones.
+and inflates later ones. ``oracle`` checks results on one session in the
+stress suite's hostile timezone: ``duckdb`` runs every catalog query
+against its DuckDB oracle (the driver gate's comparator) and writes
+``_artifacts/oracle_full.json``; ``dump`` stores named queries' results
+and ``check`` re-runs them and passes only when every value is bit-equal
+to the dump, the Spark-vs-Spark proof that an optimization kept the
+computation.
 """
 
 from __future__ import annotations
@@ -36,6 +44,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import pickle
 import shutil
 import statistics
 import subprocess
@@ -45,6 +54,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ARTIFACTS = os.path.join(REPO, "_artifacts")
 LEG_TIMEOUT_S = 3600
+ORACLE_SF_DIR = "/root/testdata/sf0.01"  # the driver gate's scale
+ORACLE_TIMEZONE = "America/New_York"  # the stress suite's hostile zone
 
 # Each row keeps the protocol its committed record depends on. Row keys:
 # t_<label> (best warm rep, else the one cold pass), t_<label>_cold (first
@@ -478,6 +489,95 @@ def cmd_sweep(a) -> int:
                        {"protocol": protocol}, a.resume, spec.get("require", ()))
 
 
+def cmd_oracle(a) -> int:
+    from real_big_data_project_spark.plans import catalog as C
+    from real_big_data_project_spark.session import get_spark
+
+    if (a.mode == "duckdb") == bool(a.names):
+        raise SystemExit("oracle: duckdb takes no names; dump and check need them")
+    spark = get_spark(f"rbds-measure-oracle-{a.mode}")
+    # a query whose result depends on the session zone fails here, not at
+    # a driver whose zone is not ours to choose
+    spark.conf.set("spark.sql.session.timeZone", ORACLE_TIMEZONE)
+    spark.sparkContext.setLogLevel("ERROR")
+    C._load_all()
+    if a.mode == "duckdb":
+        return oracle_duckdb(spark, C.QUERIES, a.sf_dir or ORACLE_SF_DIR)
+    return oracle_diff(spark, C.QUERIES, a.mode, a.names, a.sf_dir or driver_sf01())
+
+
+def oracle_duckdb(spark, queries: dict, sf_dir: str) -> int:
+    """Every registered query through the driver gate's comparator; the
+    record goes to ``_artifacts/oracle_full.json``."""
+    from real_big_data_project_spark.plans.oracle_check import check_query
+
+    rows: dict[str, dict] = {}
+    names = sorted(queries)
+    t_start = time.time()
+    for i, name in enumerate(names):
+        t0 = time.time()
+        try:
+            res = check_query(spark, name, sf_dir)
+            row = {"ok": bool(res.ok), "bit_equal": bool(res.values_bit_equal)}
+            if not res.ok:
+                row["detail"] = res.detail[:300]
+        except Exception as exc:  # noqa: BLE001 — record and continue
+            row = {"ok": False, "detail": f"{type(exc).__name__}: {exc}"[:300]}
+        row["s"] = round(time.time() - t0, 2)
+        rows[name] = row
+        print(f"[{i + 1}/{len(names)}] {name}: "
+              f"{'ok' if row['ok'] else 'FAIL'} ({row['s']}s)", flush=True)
+    record = {
+        "sf_dir": sf_dir,
+        "session_timezone": ORACLE_TIMEZONE,
+        "comparator": "plans/oracle_check.py::check_query (the driver "
+                      "gate's comparator: rows + columns + "
+                      "order-insensitive values; bit_equal flagged)",
+        "n": len(names),
+        "n_ok": sum(r["ok"] for r in rows.values()),
+        "n_bit_equal": sum(r.get("bit_equal", False) for r in rows.values()),
+        "n_rows_only": sum(queries[n].oracle is None for n in names),
+        "failures": sorted(n for n, r in rows.items() if not r["ok"]),
+        "wall_s": round(time.time() - t_start, 1),
+        "queries": rows,
+    }
+    with open(os.path.join(ARTIFACTS, "oracle_full.json"), "w") as f:
+        json.dump(record, f, indent=1)
+    print(json.dumps({k: v for k, v in record.items() if k != "queries"}))
+    return 1 if record["failures"] else 0
+
+
+def oracle_diff(spark, queries: dict, mode: str, names: list[str], sf_dir: str) -> int:
+    """``dump``: pickle each query's result under
+    ``_artifacts/diff_baseline/<sf>/``. ``check``: re-run each and compare
+    it with its dump (order-insensitive); only bit-equal values pass."""
+    from real_big_data_project_spark.plans.oracle_check import compare_frames
+
+    sf_tag = os.path.basename(sf_dir.rstrip("/"))
+    out_dir = os.path.join(ARTIFACTS, "diff_baseline", sf_tag)
+    os.makedirs(out_dir, exist_ok=True)
+    bad = []
+    for name in names:
+        got = queries[name].builder(spark, sf_dir).toPandas()
+        path = os.path.join(out_dir, f"{name}.pkl")
+        if mode == "dump":
+            with open(path, "wb") as f:
+                pickle.dump(got, f)
+            print(json.dumps({"query": name, "rows": len(got), "dumped": path}),
+                  flush=True)
+            continue
+        with open(path, "rb") as f:
+            res = compare_frames(name, got, pickle.load(f))
+        if not res.values_bit_equal:
+            bad.append(name)
+        print(json.dumps({"query": name, "rows": len(got),
+                          "bit_equal": res.values_bit_equal,
+                          "detail": res.detail[:300]}), flush=True)
+    print(json.dumps({"mode": mode, "sf": sf_tag, "n": len(names),
+                      "mismatches": bad}))
+    return 1 if bad else 0
+
+
 def probe_s() -> float:
     """Fixed-work host-speed probe: seconds for 40 512x512 matmuls."""
     import numpy as np
@@ -574,9 +674,16 @@ def main(argv: list[str] | None = None) -> int:
     ps.add_argument("--target")
     ps.add_argument("--resume", action="store_true", help="re-run only unclean rows")
     ps.add_argument("--single", help=argparse.SUPPRESS)
+    po = sub.add_parser("oracle", help="DuckDB oracle pass, or Spark-vs-Spark "
+                                       "dump and bit-equal check")
+    po.add_argument("mode", choices=("duckdb", "dump", "check"))
+    po.add_argument("names", nargs="*", help="queries to dump or check")
+    po.add_argument("--sf-dir", help=f"default {ORACLE_SF_DIR} for duckdb, "
+                                     "the driver's sf0.1 for dump and check")
     a = p.parse_args(argv)
     sys.path.insert(0, REPO)
-    return {"profile": cmd_profile, "ab": cmd_ab, "sweep": cmd_sweep}[a.cmd_name](a)
+    return {"profile": cmd_profile, "ab": cmd_ab, "sweep": cmd_sweep,
+            "oracle": cmd_oracle}[a.cmd_name](a)
 
 
 if __name__ == "__main__":
